@@ -7,8 +7,12 @@ own tests and bench runs.
 
 Scale notes (100 TB design point):
 - AQE on: runtime coalescing, skew-join splitting, broadcast conversion.
-- shuffle.partitions is a local-mode default; on a real cluster size it
-  to ~2-3x total cores and let AQE coalesce.
+- shuffle.partitions is a local-mode default for batch queries; on a
+  real cluster size it to ~2-3x total cores and let AQE coalesce.
+- streaming state partitions do not follow ``shuffle_partitions``: the
+  engine's sinks (streaming/sinks.py ``_start``) size them to
+  ``defaultParallelism`` when a query first starts, since AQE never
+  coalesces a streaming plan and the checkpoint keeps the count.
 - session timezone pinned to UTC so TIMESTAMP (instant) semantics match
   the timezone-naive parquet fixtures and the DuckDB oracle.
 """

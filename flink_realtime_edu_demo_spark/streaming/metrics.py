@@ -21,11 +21,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
+from .sinks import _start
+
 
 class MetricsCollector(StreamingQueryListener):
     """Collects per-batch metric rows from query progress events:
-    batch_id, input rows, processed rows/sec, per-operator state rows,
-    and sink description — the Flink counter set, Spark-shaped."""
+    batch_id, input rows, processed rows/sec, the trigger's phase
+    durations (ms), the event-time watermark, state rows, memory and
+    late-dropped rows summed over state operators, each state operator's
+    partition count, and sink description — the Flink counter set,
+    Spark-shaped."""
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
@@ -36,13 +41,19 @@ class MetricsCollector(StreamingQueryListener):
 
     def onQueryProgress(self, event) -> None:  # noqa: ANN001
         p = event.progress
-        state_rows = sum(s.numRowsTotal for s in p.stateOperators)
+        ops = p.stateOperators
         self.batches.append(
             {
                 "batch_id": p.batchId,
                 "num_input_rows": p.numInputRows,
                 "rows_per_sec": p.processedRowsPerSecond,
-                "state_rows": state_rows,
+                **{f"{phase}_ms": p.durationMs.get(phase)
+                   for phase in ("addBatch", "getBatch", "queryPlanning", "walCommit")},
+                "watermark": p.eventTime.get("watermark"),
+                "state_rows": sum(s.numRowsTotal for s in ops),
+                "state_memory_bytes": sum(s.memoryUsedBytes for s in ops),
+                "rows_dropped_by_watermark": sum(s.numRowsDroppedByWatermark for s in ops),
+                "state_partitions": [s.numShufflePartitions for s in ops],
                 "sink": p.sink.description,
             }
         )
@@ -69,4 +80,4 @@ def broadcast_dim_join(
         dim = load_dim(batch_df.sparkSession)
         sink(batch_df.join(F.broadcast(dim), on), batch_id)
 
-    return stream_df.writeStream.foreachBatch(handle).outputMode("append").start()
+    return _start(stream_df, stream_df.writeStream.foreachBatch(handle).outputMode("append"))

@@ -13,18 +13,41 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def _start(df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` with one state partition per core.
+
+    A stateful query takes its state partition count from
+    ``spark.sql.shuffle.partitions`` at first start and its checkpoint
+    keeps it; AQE never coalesces a streaming plan. Every state
+    partition is a store each micro-batch loads and commits, so a
+    batch-sized default (32 in get_spark, 200 in a vanilla session)
+    costs that many tasks per micro-batch however small the state.
+    ``start()`` clones the session conf, so the session's value is
+    restored at once. A restarted query keeps its checkpoint's count:
+    Spark restores it from the offset log."""
+    conf = df.sparkSession.conf
+    prev = conf.get(_SHUFFLE_PARTITIONS)
+    conf.set(_SHUFFLE_PARTITIONS, str(df.sparkSession.sparkContext.defaultParallelism))
+    try:
+        return writer.start()
+    finally:
+        conf.set(_SHUFFLE_PARTITIONS, prev)
 
 
 def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
                        mode: str = "append") -> StreamingQuery:
     """File sink with checkpointing (Flink filesystem sink + checkpoints)."""
-    return (
+    return _start(
+        df,
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .start()
+        .outputMode(mode),
     )
 
 
@@ -38,15 +61,11 @@ def idempotent_foreach_batch(
     idempotent per batch_id (e.g. partition-overwrite by batch_id, or a
     keyed MERGE). With checkpointing this yields exactly-once end-to-end
     effects for replayable sources."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch(batch_df, batch_id)
-
-    return (
-        df.writeStream.foreachBatch(handle)
+    return _start(
+        df,
+        df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .start()
+        .outputMode(mode),
     )
 
 
@@ -91,11 +110,11 @@ def multi_sink_statement_set(
         finally:
             batch_df.unpersist()
 
-    return (
+    return _start(
+        df,
         df.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-        .start()
+        .outputMode(mode),
     )
 
 

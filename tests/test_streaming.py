@@ -117,7 +117,7 @@ def test_idempotent_sink_replay_safe(spark, stream_dir, tmp_path):
     q = idempotent_foreach_batch(
         sdf, checkpoint=str(tmp_path / "ckpt"), write_batch=writer, mode="complete"
     )
-    q.awaitTermination(15)
+    q.processAllAvailable()
     q.stop()
     first = spark.read.parquet(f"{base}/batch_id=0")
     n_first = first.count()
@@ -127,6 +127,92 @@ def test_idempotent_sink_replay_safe(spark, stream_dir, tmp_path):
     writer(snapshot, 0)  # replay batch 0 verbatim
     replayed = spark.read.parquet(f"{base}/batch_id=0")
     assert replayed.count() == n_first > 0
+
+
+def test_engine_query_sizes_state_to_cores(spark, stream_dir, tmp_path):
+    """A stateful query started by the engine gets one state partition
+    per core, whatever the session's shuffle.partitions says, and the
+    session's own value is left as it was."""
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cores + 3))
+    try:
+        q = idempotent_foreach_batch(
+            tumbling_counts(stream_table(spark, stream_dir, "events")),
+            checkpoint=str(tmp_path / "ckpt"),
+            write_batch=lambda df, batch_id: df.collect(),
+        )
+        assert spark.conf.get(key) == str(cores + 3)
+        try:
+            q.processAllAvailable()
+            ops = q.lastProgress["stateOperators"]
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, prev)
+    assert ops[0]["numShufflePartitions"] == cores
+
+
+def test_restart_keeps_checkpoint_state_partitions(spark, sf_dir, stream_dir, tmp_path):
+    """A checkpoint written with another state partition count stays
+    valid: a query started raw with cores + 1 partitions reads half the
+    input and stops; restarted on the same checkpoint through
+    idempotent_foreach_batch it keeps cores + 1 state partitions (Spark
+    restores the count from the offset log), and the folded update-mode
+    output equals the batch answer."""
+    import os
+    import shutil
+
+    src = tmp_path / "src" / "events_stream"
+    src.mkdir(parents=True)
+    parts = sorted(f for f in os.listdir(f"{stream_dir}/events_stream")
+                   if f.startswith("part-") and f.endswith(".parquet"))
+    half = len(parts) // 2
+
+    def copy(names):  # copy2 keeps the event-time-ordered mtimes
+        for f in names:
+            shutil.copy2(f"{stream_dir}/events_stream/{f}", src / f)
+
+    ckpt = str(tmp_path / "ckpt")
+    emitted: list = []
+
+    def collect(df, batch_id):
+        emitted.extend(df.collect())
+
+    def query():
+        return tumbling_counts(stream_table(spark, str(tmp_path / "src"), "events"))
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    copy(parts[:half])
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(cores + 1))
+    try:
+        q1 = (query().writeStream.foreachBatch(collect)
+              .option("checkpointLocation", ckpt).outputMode("update").start())
+    finally:
+        spark.conf.set(key, prev)
+    try:
+        q1.processAllAvailable()
+    finally:
+        q1.stop()
+    assert emitted
+
+    copy(parts[half:])
+    q2 = idempotent_foreach_batch(query(), ckpt, collect, mode="update")
+    try:
+        q2.processAllAvailable()
+        ops = q2.lastProgress["stateOperators"]
+    finally:
+        q2.stop()
+    assert ops[0]["numShufflePartitions"] == cores + 1
+
+    folded = {}
+    for r in emitted:  # update mode: the last emission of a window wins
+        folded[(r.window_start, r.window_end, r.event_type)] = r
+    got = sorted(tuple(repr(v) for v in r) for r in folded.values())
+    assert got == canon_rows(tumbling_counts(load(spark, sf_dir, "events")))
 
 
 def test_statement_set_multi_sink_one_pass(spark, sf_dir, stream_dir, tmp_path):
@@ -154,7 +240,7 @@ def test_statement_set_multi_sink_one_pass(spark, sf_dir, stream_dir, tmp_path):
     q = multi_sink_statement_set(
         sdf, checkpoint=str(tmp_path / "ckpt"), sinks=sinks, mode="append"
     )
-    q.awaitTermination(60)
+    q.processAllAvailable()
     q.stop()
     ev_b = load(spark, sf_dir, "events").select(*sdf.columns)
     for name, tf in transforms.items():
@@ -771,11 +857,13 @@ def test_transform_with_state_matches_batch(spark, sf_dir, stream_dir, tmp_path)
     assert got == want and len(got) > 0
 
 
-def test_metrics_listener_and_broadcast_dim_join(spark, sf_dir, stream_dir):
+def test_metrics_listener_and_broadcast_dim_join(spark, sf_dir, stream_dir, tmp_path):
     """MetricsCollector sees every micro-batch's counters (Flink metrics
     parity) while a broadcast-state-style dim join enriches the stream;
     the dim snapshot is swapped mid-run and later batches must see the
-    NEW mapping — the property Flink's broadcast state provides."""
+    NEW mapping — the property Flink's broadcast state provides. A
+    stateful windowed query then reports its watermark, state memory,
+    late-dropped rows and one state partition per core."""
     from flink_realtime_edu_demo_spark.streaming.metrics import (
         MetricsCollector,
         broadcast_dim_join,
@@ -808,19 +896,45 @@ def test_metrics_listener_and_broadcast_dim_join(spark, sf_dir, stream_dir):
         import time as _t
 
         want_rows = load(spark, sf_dir, "events").count()
-        deadline = _t.time() + 30
-        while (
-            sum(b["num_input_rows"] for b in collector.batches) < want_rows
-            and _t.time() < deadline
-        ):
-            _t.sleep(0.5)
+
+        def drain(batches):
+            deadline = _t.time() + 30
+            while (
+                sum(b["num_input_rows"] for b in batches()) < want_rows
+                and _t.time() < deadline
+            ):
+                _t.sleep(0.5)
+
+        drain(lambda: collector.batches)
+        join_batches = list(collector.batches)
+
+        q = idempotent_foreach_batch(
+            tumbling_counts(ev), str(tmp_path / "ckpt"), lambda df, batch_id: df.collect()
+        )
+        q.processAllAvailable()
+        q.stop()
+        drain(lambda: collector.batches[len(join_batches):])
+        agg_batches = collector.batches[len(join_batches):]
     finally:
         spark.streams.removeListener(collector)
 
     assert len(seen) >= 2
     segs = [s for _, s in seen if s]
     assert segs[0] == {"seg0"} and segs[-1] != segs[0]  # refresh visible
-    assert sum(b["num_input_rows"] for b in collector.batches) == want_rows
+    assert sum(b["num_input_rows"] for b in join_batches) == want_rows
+    phases = ("addBatch_ms", "getBatch_ms", "queryPlanning_ms", "walCommit_ms")
+    for b in join_batches:  # stateless: no watermark, no state
+        assert all(b[k] >= 0 for k in phases), b
+        assert b["watermark"] is None and b["state_partitions"] == []
+        assert b["state_rows"] == b["state_memory_bytes"] == 0
+    assert sum(b["num_input_rows"] for b in agg_batches) == want_rows
+    cores = spark.sparkContext.defaultParallelism
+    for b in agg_batches:
+        assert all(b[k] >= 0 for k in phases), b
+        assert b["watermark"] is not None and b["state_partitions"] == [cores]
+        assert b["state_memory_bytes"] > 0
+        assert b["rows_dropped_by_watermark"] == 0  # in-order replay drops nothing
+    assert agg_batches[-1]["state_rows"] > 0
 
 
 def test_cumulate_stream_matches_batch(spark, sf_dir, stream_dir):
