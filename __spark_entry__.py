@@ -40,11 +40,11 @@ _VERIFIED_GREEN = (
     "q_tpch_q18", "q_tpch_q19", "q_tpch_q6", "q_upsert_latest",
     "q_join_interval", "q_join_full", "q_join_cross_topk", "q_join_inner",
     "q_join_anti", "q_agg_approx_quantile", "q_agg_approx_uv", "q_cep_until",
-    "q_cep_until_sessionized", "q_cep_times_consecutive", "q_cep_consecutive",
+    "q_cep_times_consecutive", "q_cep_consecutive",
     "q_llm_gopher_rules", "q_llm_substring_scrub", "q_cep_followed_by_group",
-    "q_cep_followed_by_group_bounded", "q_cep_followed_by_group_sessionized",
+    "q_cep_followed_by_group_bounded",
     "q_cep_until_define", "q_cep_times_or_more", "q_llm_dsir",
-    "q_cep_followed_by_any", "q_cep_followed_by_any_sessionized",
+    "q_cep_followed_by_any",
     "q_agg_regression", "q_join_lateral", "q_llm_bigram_score",
     "q_llm_heavy_hitters", "q_llm_minhash_lsh", "q_llm_pack_chunks",
     "q_llm_pack_greedy", "q_llm_pii_scrub", "q_llm_rand_proj",
@@ -67,15 +67,13 @@ _VERIFIED_GREEN = (
     "q_agg_grouping_sets", "q_agg_null_group", "q_dedup_exact", "q_fn_array",
     "q_fn_cast", "q_fn_datetime2", "q_fn_editdist", "q_fn_trig", "q_funnel",
     "q_join_range_bin", "q_llm_ann_ivf", "q_llm_centroids",
-    "q_cep_mixed_links_sessionized",
-    "q_cep_not_next_end", "q_cep_followed_by_readmit", "q_cep_mixed_links", "q_cep_followed_by", "q_cep_followed_by_sessionized",
+    "q_cep_not_next_end", "q_cep_followed_by_readmit", "q_cep_mixed_links", "q_cep_followed_by",
     "q_cep_followed_by_rows",
     "q_cep_followed_by_define", "q_cep_not_followed_by", "q_cep_followed_by_iterative",
     "q_cep_followed_by_iterative_within",
-    "q_cep_followed_by_iterative_sessionized",
     "q_cep_followed_by_iterative_all", "q_cep_followed_by_iterative_prev",
     "q_cep_iterative", "q_cep_iterative_anchor", "q_cep_iterative_within",
-    "q_cep_iterative_sessionized", "q_llm_fingerprint", "q_llm_kmeans",
+    "q_llm_fingerprint", "q_llm_kmeans",
     "q_llm_kmeans_assign", "q_llm_knn", "q_llm_knn_ivf_scaled",
     "q_llm_lang_id", "q_llm_quality", "q_llm_tokens", "q_llm_winnow",
     "q_join_theta_scaled", "q_cdc_debezium_scd2", "q_agg_json_objectagg",
@@ -95,8 +93,8 @@ _VERIFIED_GREEN = (
     "q_llm_sample_exact_k", "q_llm_split", "q_llm_stratified_sample",
     "q_llm_tfidf",
     "q_cep_runagg", "q_cep_runagg_interior", "q_cep_runagg_tail",
-    "q_cep_runagg_multi_tail", "q_cep_runagg_sessionized", "q_cep_runagg_chain",
-    "q_cep_runagg_chain_sessionized", "q_cep_runagg_plus_interior", "q_cep_runagg_bounded",
+    "q_cep_runagg_multi_tail", "q_cep_runagg_chain",
+    "q_cep_runagg_plus_interior", "q_cep_runagg_bounded",
     "q_cep_runagg_iterative", "q_cep_runagg_iter_firstloop", "q_cep_runagg_minmax",
     "q_cep_followed_by_skip_first", "q_cep_followed_by_skip_last",
 )
@@ -111,6 +109,16 @@ _VERIFIED_GREEN = (
 # the r3-era scalar/json keys; the 4 displaced stale slots returned
 # to the green top as new keys landed).
 _REVERIFY_FRONT = (
+    # sessionized CEP keys rewritten as sessionize() + the flat engine
+    # keyed by (user_id, session_id), with the oracle reading
+    # sessionize_oracle_sql — rotated to the window front for
+    # re-verification:
+    "q_cep_sessionized", "q_cep_mixed_links_sessionized",
+    "q_cep_followed_by_sessionized", "q_cep_followed_by_any_sessionized",
+    "q_cep_until_sessionized", "q_cep_followed_by_group_sessionized",
+    "q_cep_prev_sessionized", "q_cep_runagg_chain_sessionized",
+    "q_cep_runagg_sessionized", "q_cep_iterative_sessionized",
+    "q_cep_followed_by_iterative_sessionized",
     # r16 optimization-round engine changes (within-scan window
     # precompute, q_agg_corr long quantity moments, BPE literal
     # re-entry, simhash/dhash pre-projection, graph-gate single
@@ -130,8 +138,8 @@ _REVERIFY_FRONT = (
     "q_agg_percentile", "q_agg_rollup", "q_agg_stats", "q_case_when",
     "q_cep_all_rows", "q_cep_all_rows_define", "q_cep_alternation",
     "q_cep_group_quantifier", "q_cep_measures", "q_cep_negation",
-    "q_cep_pattern", "q_cep_permute", "q_cep_prev", "q_cep_prev_sessionized",
-    "q_cep_quantifier", "q_cep_reluctant", "q_cep_sessionized",
+    "q_cep_pattern", "q_cep_permute", "q_cep_prev",
+    "q_cep_quantifier", "q_cep_reluctant",
     "q_cep_skip_last", "q_cep_skip_next", "q_cep_unmatched_rows",
     "q_distinct", "q_dq_profile", "q_explode_array", "q_explode_outer",
     "q_filter_pred", "q_fn_monthmath", "q_fn_struct", "q_fn_url",

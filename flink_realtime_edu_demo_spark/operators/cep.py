@@ -290,8 +290,9 @@ _GUARD_MSG = (
     f"per-key token string exceeds {_GUARD_TOKENS} tokens and "
     "the pattern compiles to a recursive Java-regex loop "
     "(unbounded quantifier over a group/complement atom) — the "
-    "scan would overflow the JVM stack; use the sessionized "
-    "form to bound per-key state, or a bounded {m,n} quantifier"
+    "scan would overflow the JVM stack; run sessionize(events, gap) "
+    "and key the engine by [key, 'session_id'] to bound per-key "
+    "state, or use a bounded {m,n} quantifier"
 )
 
 
@@ -307,10 +308,11 @@ _ANCHOR_SCAN_ROWS = 20_000
 _ANCHOR_SCAN_MSG = (
     f"per-key rows exceed the {_ANCHOR_SCAN_ROWS}-row anchored-scan "
     "gate: the FLAT iterative/runagg CEP forms are O(rows^2) per key "
-    "(HOTKEY.json: 35.9s at one 20k-row key) — deploy the _sessionized "
-    "form (bounds the scan by session length) or a within_minutes "
-    "bound, or pass max_key_rows=None / a higher bound to accept the "
-    "quadratic knowingly"
+    "(HOTKEY.json: 35.9s at one 20k-row key) — run sessionize(events, "
+    "gap) and key the engine by [key, 'session_id'] (bounds the scan "
+    "by session length), add a within_minutes bound, or pass "
+    "max_key_rows=None / a higher bound to accept the quadratic "
+    "knowingly"
 )
 
 
@@ -336,9 +338,9 @@ _WINDOW_SCAN_MSG = (
     "scan at the window edge (a precomputed per-row extent — no "
     "per-anchor time pass), but a key whose rows all land inside ONE "
     "within window still runs O(window_rows) work per anchor "
-    "(ADVICE r12) — shrink within_minutes, deploy the _sessionized "
-    "form, or pass max_key_rows=None / a higher bound to accept the "
-    "cost knowingly"
+    "(ADVICE r12) — shrink within_minutes, run sessionize(events, gap) "
+    "and key the engine by [key, 'session_id'], or pass "
+    "max_key_rows=None / a higher bound to accept the cost knowingly"
 )
 
 
@@ -470,17 +472,34 @@ def _var_count_col(var: str, etype, chars: dict[str, str]):
     return cls_cnt.cast("long").alias(f"n_{var.lower()}")
 
 
+def _key_list(key) -> list[str]:
+    """A partition key given as one column or a list of columns (the
+    engines' and oracles' shared convention), as a list."""
+    return [key] if isinstance(key, str) else list(key)
+
+
+def _key_eq(a: str, b: str, keys: list[str]) -> str:
+    """SQL predicate ``a.k = b.k AND ...`` over every key column."""
+    return " AND ".join(f"{a}.{k} = {b}.{k}" for k in keys)
+
+
+def _key_cols(alias: str, keys: list[str]) -> str:
+    """SQL select list ``alias.k, ...`` over every key column."""
+    return ", ".join(f"{alias}.{k}" for k in keys)
+
+
 def _oracle_core(
     pattern,
     keys: list[str],
-    source_sql: str,
+    table: str,
     ts: str,
     type_col: str,
     id_col: str,
     regex_override: str | None = None,
 ) -> str:
-    """Shared DuckDB replay of :func:`match_recognize` over an arbitrary
-    event source subquery and (possibly composite) partition keys.
+    """Shared DuckDB replay of :func:`match_recognize` over ``table``
+    (a name or a parenthesised relation) and (possibly composite)
+    partition keys.
     ``regex_override`` lets PERMUTE substitute its alternation-expanded
     token regex while keeping the flat variable list for measures."""
     _validate(pattern)
@@ -506,7 +525,7 @@ def _oracle_core(
         count_sql(var, etype) for var, etype, _ in pattern
     )
     return f"""
-    WITH src AS ({source_sql}),
+    WITH src AS (SELECT * FROM {table}),
     toks AS (
         SELECT {ks},
                CASE {type_col} {case} ELSE 'z' END || {id_col} || ';' AS tok,
@@ -534,7 +553,7 @@ def match_recognize_oracle_sql(
     id_col: str = "event_id",
 ) -> str:
     """DuckDB SQL replaying :func:`match_recognize` token-for-token."""
-    return _oracle_core(pattern, [key], f"SELECT * FROM {table}",
+    return _oracle_core(pattern, _key_list(key), table,
                         ts, type_col, id_col)
 
 
@@ -665,6 +684,7 @@ def match_recognize_all_rows_oracle_sql(
     a per-variable UNION ALL unnest, and row_in_match numbered by
     (variable position, position within the run)."""
     _validate(pattern)
+    key = ", ".join(_key_list(key))
     chars = _char_map(pattern)
     regex = _token_regex_captured(pattern, chars)
     case = " ".join(f"WHEN '{t}' THEN '{c}'" for t, c in chars.items())
@@ -732,13 +752,14 @@ def match_recognize_all_rows_unmatched_oracle_sql(
     inner = match_recognize_all_rows_oracle_sql(
         pattern, table, key, ts, type_col, id_col
     )
+    keys = _key_list(key)
     return f"""
-    SELECT e.{key}, e.{id_col} AS event_id, e.{ts} AS ts,
+    SELECT {_key_cols('e', keys)}, e.{id_col} AS event_id, e.{ts} AS ts,
            e.{type_col} AS event_type,
            ar.match_no, ar.row_in_match, ar.classifier
     FROM {table} e
     LEFT JOIN ({inner}) ar
-           ON ar.{key} = e.{key} AND ar.event_id = e.{id_col}
+           ON {_key_eq('ar', 'e', keys)} AND ar.event_id = e.{id_col}
     """
 
 
@@ -997,6 +1018,8 @@ def match_recognize_within_oracle_sql(
     with an interval RANGE window — a ts-only count, identical to the
     Spark filter), the same anchored regex, and the same left-to-right
     resume-after-match selection via a recursive CTE."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     _validate(pattern)
     chars = _char_map(pattern)
     regex = _token_regex(pattern, chars)
@@ -1046,15 +1069,15 @@ def match_recognize_within_oracle_sql(
     seq AS (SELECT {key}, string_agg(tok, '' ORDER BY {ts}, {id_col}) AS s
             FROM toks GROUP BY {key}),
     hits AS (
-        SELECT r.{key}, r.off,
+        SELECT {_key_cols('r', keys)}, r.off,
                regexp_extract(
                    substring(q.s, CAST(r.off AS INT),
                              CAST(COALESCE(r2.off, length(q.s) + 1) - r.off
                                   AS INT)),
                    '^(?:{regex})', 0) AS m
         FROM r
-        JOIN seq q ON q.{key} = r.{key}
-        LEFT JOIN r r2 ON r2.{key} = r.{key} AND r2.rn = r.rj + 1
+        JOIN seq q ON {_key_eq('q', 'r', keys)}
+        LEFT JOIN r r2 ON {_key_eq('r2', 'r', keys)} AND r2.rn = r.rj + 1
         {prune}
     ),
     hr AS (SELECT {key}, off, m,
@@ -1063,12 +1086,12 @@ def match_recognize_within_oracle_sql(
     pick AS (
         SELECT {key}, off, m, resume, 1 AS match_no
         FROM hr h
-        WHERE off = (SELECT min(off) FROM hr h2 WHERE h2.{key} = h.{key})
+        WHERE off = (SELECT min(off) FROM hr h2 WHERE {_key_eq('h2', 'h', keys)})
       UNION ALL
-        SELECT n.{key}, n.off, n.m, n.resume, p.match_no + 1
-        FROM pick p JOIN hr n ON n.{key} = p.{key} AND n.off >= p.resume
+        SELECT {_key_cols('n', keys)}, n.off, n.m, n.resume, p.match_no + 1
+        FROM pick p JOIN hr n ON {_key_eq('n', 'p', keys)} AND n.off >= p.resume
         WHERE n.off = (SELECT min(n2.off) FROM hr n2
-                       WHERE n2.{key} = p.{key} AND n2.off >= p.resume)
+                       WHERE {_key_eq('n2', 'p', keys)} AND n2.off >= p.resume)
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,
            CAST(regexp_extract(m, '^[a-z]([0-9]+);', 1) AS BIGINT)
@@ -1157,7 +1180,7 @@ def match_recognize_permute_oracle_sql(
     alternation-expanded regex (RE2 shares Java's leftmost-first
     alternation preference, so the permutation tried first is the same)."""
     flat, _, regex = _permute_parts(perm, prefix, suffix)
-    return _oracle_core(flat, [key], f"SELECT * FROM {table}",
+    return _oracle_core(flat, _key_list(key), table,
                         ts, type_col, id_col, regex_override=regex)
 
 
@@ -1275,7 +1298,7 @@ def match_recognize_groups_oracle_sql(
     group-wrapped token regex (``(?:...)`` + quantifier behave
     identically in Java regex and RE2)."""
     flat, _, regex = _group_parts(pattern)
-    return _oracle_core(flat, [key], f"SELECT * FROM {table}",
+    return _oracle_core(flat, _key_list(key), table,
                         ts, type_col, id_col, regex_override=regex)
 
 
@@ -1680,19 +1703,15 @@ def match_recognize_define_oracle_sql(
     id_col: str = "event_id",
     value_col: str = "value",
     skip: str = "past_last_row",
-    keys: list[str] | None = None,
-    source_sql: str | None = None,
 ) -> str:
     """DuckDB SQL replaying :func:`match_recognize_define` token-for-
     token (same bitmask alphabet, same regex, same anchored-offset
     enumeration for to_next_row, and for to_first/to_last the same
-    sequential selection via a recursive CTE). ``keys``/``source_sql``
-    support composite partitions over a derived event source — the
-    sessionized deployment shape."""
+    sequential selection via a recursive CTE)."""
     _validate_defines(pattern)
     mode, target = _parse_skip(skip, pattern)
     regex = _define_regex(pattern)
-    klist = keys or [key]
+    klist = _key_list(key)
     key = ", ".join(klist)  # every {key} below is the full key list
     join_sq = " AND ".join(f"q.{k} = o.{k}" for k in klist)
     o_key = ", ".join(f"o.{k}" for k in klist)
@@ -1700,7 +1719,7 @@ def match_recognize_define_oracle_sql(
     eq_np = " AND ".join(f"n.{k} = p.{k}" for k in klist)
     eq_n2p = " AND ".join(f"n2.{k} = p.{k}" for k in klist)
     n_key = ", ".join(f"n.{k}" for k in klist)
-    inner = source_sql or f"SELECT * FROM {table}"
+    inner = f"SELECT * FROM {table}"
     bits = []
     for i, (_, define, _) in enumerate(pattern):
         conds = []
@@ -1861,6 +1880,7 @@ def match_recognize_define_all_rows_oracle_sql(
     """DuckDB SQL replaying :func:`match_recognize_define_all_rows` —
     the define oracle's bitmask tokenization feeding the shared
     captured-group decode tail."""
+    key = ", ".join(_key_list(key))
     _validate_defines(pattern)
     regex = _define_regex_captured(pattern)
     bits = []
@@ -1973,6 +1993,8 @@ def match_recognize_define_within_oracle_sql(
     define oracle's bitmask tokenization (lag/lead over the full
     partition), the interval-RANGE-window run truncation, the anchored
     regex, and the recursive-CTE resume-after-match selection."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     _validate_defines(pattern)
     regex = _define_regex(pattern)
     bits = []
@@ -2027,15 +2049,15 @@ def match_recognize_define_within_oracle_sql(
     seq AS (SELECT {key}, string_agg(tok, '' ORDER BY {ts}, {id_col}) AS s
             FROM toks GROUP BY {key}),
     hits AS (
-        SELECT r.{key}, r.off,
+        SELECT {_key_cols('r', keys)}, r.off,
                regexp_extract(
                    substring(q.s, CAST(r.off AS INT),
                              CAST(COALESCE(r2.off, length(q.s) + 1) - r.off
                                   AS INT)),
                    '^(?:{regex})', 0) AS m
         FROM r
-        JOIN seq q ON q.{key} = r.{key}
-        LEFT JOIN r r2 ON r2.{key} = r.{key} AND r2.rn = r.rj + 1
+        JOIN seq q ON {_key_eq('q', 'r', keys)}
+        LEFT JOIN r r2 ON {_key_eq('r2', 'r', keys)} AND r2.rn = r.rj + 1
         {prune}
     ),
     hr AS (SELECT {key}, off, m,
@@ -2044,12 +2066,12 @@ def match_recognize_define_within_oracle_sql(
     pick AS (
         SELECT {key}, off, m, resume, 1 AS match_no
         FROM hr h
-        WHERE off = (SELECT min(off) FROM hr h2 WHERE h2.{key} = h.{key})
+        WHERE off = (SELECT min(off) FROM hr h2 WHERE {_key_eq('h2', 'h', keys)})
       UNION ALL
-        SELECT n.{key}, n.off, n.m, n.resume, p.match_no + 1
-        FROM pick p JOIN hr n ON n.{key} = p.{key} AND n.off >= p.resume
+        SELECT {_key_cols('n', keys)}, n.off, n.m, n.resume, p.match_no + 1
+        FROM pick p JOIN hr n ON {_key_eq('n', 'p', keys)} AND n.off >= p.resume
         WHERE n.off = (SELECT min(n2.off) FROM hr n2
-                       WHERE n2.{key} = p.{key} AND n2.off >= p.resume)
+                       WHERE {_key_eq('n2', 'p', keys)} AND n2.off >= p.resume)
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,
            CAST(regexp_extract(m, '^[a-z]([0-9]+);', 1) AS BIGINT)
@@ -2074,7 +2096,14 @@ def sessionize(
     ``gap_minutes``. Pure timestamp arithmetic (no epoch conversion, so
     TIMESTAMP_NTZ never passes through a session-timezone cast) — one
     sort-shuffle on the key, the same exchange the downstream
-    per-session aggregation reuses."""
+    per-session aggregation reuses.
+
+    Sessionized CEP is a composition, not an engine variant: pass the
+    result to any engine with ``key=[key, "session_id"]`` — matches
+    cannot span a session gap, and per-group state (token strings,
+    anchored scans, PREV/NEXT navigation, prefix sums) is bounded by
+    session length instead of the key's full history. The paired
+    oracle reads ``sessionize_oracle_sql(table, ...)`` as its table."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(key).orderBy(ts, id_col)
@@ -2091,101 +2120,26 @@ def sessionize(
     )
 
 
-def match_recognize_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, object, str]],
+def sessionize_oracle_sql(
+    table: str,
     gap_minutes: int,
     key: str = "user_id",
     ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """The 100 TB deployment shape promised in SCALE.md: sessionize the
-    key by ``gap_minutes``, then run :func:`match_recognize` within each
-    (key, session) — matches cannot span a session gap, and per-group
-    token strings are bounded by session length instead of a key's full
-    history. Output adds ``session_id`` to the match columns."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize(s, pattern, key=[key, "session_id"],
-                           ts=ts, type_col=type_col, id_col=id_col)
-
-
-def match_recognize_sessionized_oracle_sql(
-    pattern,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
     id_col: str = "event_id",
 ) -> str:
-    """DuckDB SQL replaying :func:`match_recognize_sessionized`."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
+    """DuckDB relation replaying :func:`sessionize`: every column of
+    ``table`` plus ``session_id``. Parenthesised and unaliased, so any
+    ``*_oracle_sql`` takes it as its ``table`` argument."""
+    order = f"PARTITION BY {key} ORDER BY {ts}, {id_col}"
+    return f"""(
+        SELECT * EXCLUDE (prev_ts),
                CAST(SUM(CASE WHEN prev_ts IS NULL
                               OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
                          THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return _oracle_core(pattern, [key, "session_id"], source,
-                        ts, type_col, id_col)
+                    OVER ({order} ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT)
+                   AS session_id
+        FROM (SELECT *, lag({ts}) OVER ({order}) AS prev_ts FROM {table}))"""
 
-
-def match_recognize_define_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, dict, str]],
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    skip: str = "past_last_row",
-) -> DataFrame:
-    """Sessionized deployment shape for DEFINE-based matching: PREV/NEXT
-    navigation is confined to the (key, session) partition — the first
-    row of each SESSION has NULL PREV, as Flink CEP within session
-    windows behaves — and per-group state is bounded by session length.
-    All four AFTER MATCH skip policies compose."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_define(
-        s, pattern, key=[key, "session_id"], ts=ts, type_col=type_col,
-        id_col=id_col, value_col=value_col, skip=skip,
-    )
-
-
-def match_recognize_define_sessionized_oracle_sql(
-    pattern: list[tuple[str, dict, str]],
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    skip: str = "past_last_row",
-) -> str:
-    """DuckDB SQL replaying :func:`match_recognize_define_sessionized`."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return match_recognize_define_oracle_sql(
-        pattern, ts=ts, type_col=type_col, id_col=id_col,
-        value_col=value_col, skip=skip,
-        keys=[key, "session_id"], source_sql=source,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2946,8 +2900,6 @@ def match_recognize_runagg_oracle_sql(
     id_col: str = "event_id",
     value_col: str = "value",
     skip: str = "past_last_row",
-    keys: list[str] | None = None,
-    source_sql: str | None = None,
 ) -> str:
     """DuckDB SQL replaying :func:`match_recognize_runagg` decision for
     decision: the same DECIMAL(18,6) partition prefix sums (exact, so
@@ -2957,9 +2909,7 @@ def match_recognize_runagg_oracle_sql(
     whose-next-row-matches backtracking for the bounded interior form
     (a correlated MAX over suffix-satisfying rows inside the run
     envelope), and for past_last_row the same left-to-right
-    non-overlapping selection via a recursive CTE. ``keys``/
-    ``source_sql`` support composite partitions over a derived event
-    source — the sessionized deployment shape."""
+    non-overlapping selection via a recursive CTE."""
     prefix, (_, adef, aquant), suffixes = _validate_runagg(pattern)
     if skip not in ("past_last_row", "to_next_row"):
         raise ValueError("skip must be 'past_last_row' or 'to_next_row'")
@@ -2971,7 +2921,7 @@ def match_recognize_runagg_oracle_sql(
     )
     tail = bool(suffixes) and suffixes[-1][2] == "+" and not general
     min_b = 1 if aquant == "+" else 0
-    klist = keys or [key]
+    klist = _key_list(key)
     key = ", ".join(klist)  # every {key} below is the full key list
     eq_r2c = " AND ".join(f"r2.{k} = c.{k}" for k in klist)
     eq_rfm = " AND ".join(f"rf.{k} = m1.{k}" for k in klist)
@@ -2983,7 +2933,7 @@ def match_recognize_runagg_oracle_sql(
     c_key = ", ".join(f"c.{k}" for k in klist)
     m1_key = ", ".join(f"m1.{k}" for k in klist)
     nx_key = ", ".join(f"nx.{k}" for k in klist)
-    inner = source_sql or f"SELECT * FROM {table}"
+    inner = f"SELECT * FROM {table}"
 
     def simple_sql(define: dict) -> str:
         conds = []
@@ -3283,68 +3233,6 @@ def match_recognize_runagg_oracle_sql(
         LEFT JOIN r rb ON {eq_rbm} AND rb.rn = m1.off + {p} + m1.b_rows - 1
     ){numbering}
     """
-
-
-def match_recognize_runagg_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, dict, str]],
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    skip: str = "past_last_row",
-    max_key_rows: int | None = _ANCHOR_SCAN_ROWS,
-) -> DataFrame:
-    """Sessionized deployment shape for running-aggregate DEFINEs
-    (VERDICT r6 next-step #3 — closes the one unbounded-key envelope in
-    the CEP family): sessionize the key by ``gap_minutes``, then run
-    :func:`match_recognize_runagg` within each (key, session). The
-    per-key collected array — and therefore the documented O(rows²)
-    anchored scan — is bounded by SESSION length, not the key's full
-    history, so a hot key at 100x data costs sessions x session², not
-    history². PREV navigation in dir-defines is session-confined
-    (first session row has NULL PREV), matching the other sessionized
-    CEP shapes. Output adds ``session_id`` to the match columns."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_runagg(
-        s, pattern, key=[key, "session_id"], ts=ts, type_col=type_col,
-        id_col=id_col, value_col=value_col, skip=skip,
-        max_key_rows=max_key_rows,
-    )
-
-
-def match_recognize_runagg_sessionized_oracle_sql(
-    pattern: list[tuple[str, dict, str]],
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    skip: str = "past_last_row",
-) -> str:
-    """DuckDB SQL replaying :func:`match_recognize_runagg_sessionized`
-    (the same sessionize window as the other sessionized oracles, then
-    the runagg replay over the composite (key, session_id) partition)."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return match_recognize_runagg_oracle_sql(
-        pattern, ts=ts, type_col=type_col, id_col=id_col,
-        value_col=value_col, skip=skip,
-        keys=[key, "session_id"], source_sql=source,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3930,7 +3818,7 @@ def match_recognize_relaxed(
 def _relaxed_oracle_core(
     pattern,
     keys: list[str],
-    source_sql: str,
+    table: str,
     ts: str,
     type_col: str,
     id_col: str,
@@ -3945,7 +3833,7 @@ def _relaxed_oracle_core(
     links = _validate_links(pattern, links)
     chars = _char_map(pattern)
     regex = _relaxed_regex(pattern, chars, links)
-    return _relaxed_oracle_with(pattern, chars, regex, keys, source_sql,
+    return _relaxed_oracle_with(pattern, chars, regex, keys, table,
                                 ts, type_col, id_col)
 
 
@@ -3954,7 +3842,7 @@ def _relaxed_oracle_with(
     chars: dict[str, str],
     regex: str,
     keys: list[str],
-    source_sql: str,
+    table: str,
     ts: str,
     type_col: str,
     id_col: str,
@@ -3991,7 +3879,7 @@ def _relaxed_oracle_with(
     )
     rsel = ", ".join(f"g{i}[i] AS r{i}" for i in range(k))
     return f"""
-    WITH src AS ({source_sql}),
+    WITH src AS (SELECT * FROM {table}),
     toks AS (
         SELECT {ks},
                CASE {type_col} {case} ELSE 'z' END || {id_col} || ';' AS tok,
@@ -4035,12 +3923,10 @@ def match_recognize_relaxed_oracle_sql(
     the engine's regex verbatim)."""
     mode, target = _parse_skip(skip, pattern)
     if mode == "past_last_row":
-        return _relaxed_oracle_core(pattern, [key],
-                                    f"SELECT * FROM {table}",
-                                    ts, type_col, id_col, links)
-    return _relaxed_skip_oracle(pattern, mode, target, [key],
-                                f"SELECT * FROM {table}",
-                                ts, type_col, id_col, links)
+        return _relaxed_oracle_core(pattern, _key_list(key),
+                                    table, ts, type_col, id_col, links)
+    return _relaxed_skip_oracle(pattern, mode, target, _key_list(key),
+                                table, ts, type_col, id_col, links)
 
 
 def _relaxed_skip_oracle(
@@ -4048,7 +3934,7 @@ def _relaxed_skip_oracle(
     mode: str,
     target: int | None,
     keys: list[str],
-    source_sql: str,
+    table: str,
     ts: str,
     type_col: str,
     id_col: str,
@@ -4103,7 +3989,7 @@ def _relaxed_skip_oracle(
         for i in range(k)
     )
     common = f"""
-    src AS ({source_sql}),
+    src AS (SELECT * FROM {table}),
     toks AS (
         SELECT {ks},
                CASE {type_col} {case} ELSE 'z' END || {id_col} || ';' AS tok,
@@ -4181,68 +4067,6 @@ def _relaxed_skip_oracle(
            first_event_id, last_event_id, n_rows, n_skipped, {var_cols}
     FROM pick"""
     return ("WITH RECURSIVE " + common.replace("{RESUME}", resume) + body)
-
-
-def match_recognize_relaxed_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, object, str]],
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    skip: str = "past_last_row",
-    links: set | frozenset | None = None,
-) -> DataFrame:
-    """Sessionized deployment shape for relaxed matching — Flink jobs
-    run followedBy patterns inside session/time windows for exactly the
-    state-bound reason SCALE.md gives: skip-till-next otherwise holds a
-    partial match open across a key's entire history. Matches cannot
-    span a session gap; adds ``session_id`` to the match columns.
-    ``skip`` composes (r13): the variable-targeted modes' anchored
-    attempts run per (key, session), which is also what bounds the
-    every-offset scan on a hot key. ``links`` composes too (r13 mixed
-    strict/relaxed edges — the adjacency constraint applies within the
-    session's row order, which is the per-key order restricted to the
-    session)."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_relaxed(
-        s, pattern, key=[key, "session_id"],
-        ts=ts, type_col=type_col, id_col=id_col, skip=skip, links=links,
-    )
-
-
-def match_recognize_relaxed_sessionized_oracle_sql(
-    pattern,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    skip: str = "past_last_row",
-    links: set | frozenset | None = None,
-) -> str:
-    """DuckDB SQL replaying :func:`match_recognize_relaxed_sessionized`
-    (``links`` = the r13 mixed strict/relaxed edges, regex-shared)."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    mode, target = _parse_skip(skip, pattern)
-    if mode != "past_last_row":
-        return _relaxed_skip_oracle(pattern, mode, target,
-                                    [key, "session_id"], source,
-                                    ts, type_col, id_col, links)
-    return _relaxed_oracle_core(pattern, [key, "session_id"], source,
-                                ts, type_col, id_col, links)
 
 
 def _edge_first_admit_regex(etype, chars: dict[str, str]) -> str:
@@ -4385,6 +4209,8 @@ def match_recognize_relaxed_within_oracle_sql(
     selection, with the relaxed captured regex and per-group measure
     re-extraction from the matched substring (``links`` = the r13
     mixed strict edges, regex-shared)."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     _validate_relaxed(pattern)
     links = _validate_links(pattern, links)
     chars = _char_map(pattern)
@@ -4452,15 +4278,15 @@ def match_recognize_relaxed_within_oracle_sql(
     seq AS (SELECT {key}, string_agg(tok, '' ORDER BY {ts}, {id_col}) AS s
             FROM toks GROUP BY {key}),
     hits AS (
-        SELECT r.{key}, r.off,
+        SELECT {_key_cols('r', keys)}, r.off,
                regexp_extract(
                    substring(q.s, CAST(r.off AS INT),
                              CAST(COALESCE(r2.off, length(q.s) + 1) - r.off
                                   AS INT)),
                    '^(?:{regex})', 0) AS m
         FROM r
-        JOIN seq q ON q.{key} = r.{key}
-        LEFT JOIN r r2 ON r2.{key} = r.{key} AND r2.rn = r.rj + 1
+        JOIN seq q ON {_key_eq('q', 'r', keys)}
+        LEFT JOIN r r2 ON {_key_eq('r2', 'r', keys)} AND r2.rn = r.rj + 1
         {prune}
     ),
     hr AS (SELECT {key}, off, m,
@@ -4469,12 +4295,12 @@ def match_recognize_relaxed_within_oracle_sql(
     pick AS (
         SELECT {key}, off, m, resume, 1 AS match_no
         FROM hr h
-        WHERE off = (SELECT min(off) FROM hr h2 WHERE h2.{key} = h.{key})
+        WHERE off = (SELECT min(off) FROM hr h2 WHERE {_key_eq('h2', 'h', keys)})
       UNION ALL
-        SELECT n.{key}, n.off, n.m, n.resume, p.match_no + 1
-        FROM pick p JOIN hr n ON n.{key} = p.{key} AND n.off >= p.resume
+        SELECT {_key_cols('n', keys)}, n.off, n.m, n.resume, p.match_no + 1
+        FROM pick p JOIN hr n ON {_key_eq('n', 'p', keys)} AND n.off >= p.resume
         WHERE n.off = (SELECT min(n2.off) FROM hr n2
-                       WHERE n2.{key} = p.{key} AND n2.off >= p.resume)
+                       WHERE {_key_eq('n2', 'p', keys)} AND n2.off >= p.resume)
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,
            CAST(regexp_extract(m, '^[a-z]([0-9]+);', 1) AS BIGINT)
@@ -4657,9 +4483,8 @@ def match_recognize_relaxed_not_oracle_sql(
         plain + [("__F", types, "1") for types in forbid.values()]
     )
     regex = _relaxed_not_regex(plain, forbid, chars)
-    return _relaxed_oracle_with(plain, chars, regex, [key],
-                                f"SELECT * FROM {table}",
-                                ts, type_col, id_col)
+    return _relaxed_oracle_with(plain, chars, regex, _key_list(key),
+                                table, ts, type_col, id_col)
 
 
 def _relaxed_classified(var_name: str, etype, chars: dict[str, str]):
@@ -4773,6 +4598,7 @@ def match_recognize_relaxed_all_rows_oracle_sql(
     the same captured relaxed scan, per-variable group arrays unnested
     token-wise with the admit-class CASE classifier (``links`` = the
     r13 mixed strict edges, regex-shared)."""
+    key = ", ".join(_key_list(key))
     _validate_relaxed(pattern)
     links = _validate_links(pattern, links)
     chars = _char_map(pattern)
@@ -4981,16 +4807,16 @@ def _fba_oracle_core(
     pattern,
     within_minutes: int | None,
     keys: list[str],
-    source_sql: str,
+    table: str,
     ts: str,
     type_col: str,
     id_col: str,
 ) -> str:
     """Shared DuckDB replay of :func:`match_recognize_followed_by_any`
     — the same k-way ordered join, spelled as plain ANSI joins over a
-    source subquery (the combination semantics are fully relational;
-    no regex replay needed). ``keys`` may be compound (the sessionized
-    form joins on (key, session_id))."""
+    table (the combination semantics are fully relational; no regex
+    replay needed). ``keys`` may be compound (the sessionized form
+    joins on (key, session_id))."""
     _validate_fba(pattern)
     k = len(pattern)
     joins = []
@@ -5012,7 +4838,7 @@ def _fba_oracle_core(
         for i, (var, _, _) in enumerate(pattern)
     )
     return f"""
-    WITH src AS ({source_sql})
+    WITH src AS (SELECT * FROM {table})
     SELECT {key_cols},
            {id_cols},
            e0.{ts} AS first_ts,
@@ -5033,58 +4859,8 @@ def match_recognize_followed_by_any_oracle_sql(
     id_col: str = "event_id",
 ) -> str:
     """DuckDB SQL replaying :func:`match_recognize_followed_by_any`."""
-    return _fba_oracle_core(pattern, within_minutes, [key],
-                            f"SELECT * FROM {table}", ts, type_col, id_col)
-
-
-def match_recognize_followed_by_any_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, object, str]],
-    gap_minutes: int,
-    within_minutes: int | None = None,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Sessionized deployment shape for followedByAny: combinations
-    cannot span a session gap, so the per-key combination space is
-    bounded by session length — the same state-bound answer the other
-    engines give, and the shape the streaming SessionCepSink deploys
-    (a closed session's combination set is final). Adds ``session_id``
-    to the output columns."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_followed_by_any(
-        s, pattern, within_minutes=within_minutes,
-        key=[key, "session_id"], ts=ts, type_col=type_col, id_col=id_col,
-    )
-
-
-def match_recognize_followed_by_any_sessionized_oracle_sql(
-    pattern,
-    gap_minutes: int,
-    within_minutes: int | None = None,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
-    """DuckDB SQL replaying
-    :func:`match_recognize_followed_by_any_sessionized`."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return _fba_oracle_core(pattern, within_minutes, [key, "session_id"],
-                            source, ts, type_col, id_col)
+    return _fba_oracle_core(pattern, within_minutes, _key_list(key),
+                            table, ts, type_col, id_col)
 
 
 # --- times(m,n).allowCombinations(): non-deterministic LOOP contiguity ----
@@ -5361,6 +5137,8 @@ def match_recognize_times_combinations_oracle_sql(
     scale), the same prefix pointer hops, per-k ordered join chains
     UNION ALL'd, suffix pointer hops and (a_ts, a_id, loop_last_ts,
     loop_last_id, n_loop, loop_first_id) renumbering."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     loop_idx, lo, hi = _validate_combinations(pattern)
     nvars = len(pattern)
     w = int(within_minutes)
@@ -5378,11 +5156,11 @@ def match_recognize_times_combinations_oracle_sql(
     for i in range(1, loop_idx):
         p = "a" if i == 1 else f"v{i - 1}"
         pre_joins.append(
-            f"""JOIN aug v{i} ON v{i}.{key} = a.{key}
+            f"""JOIN aug v{i} ON {_key_eq(f'v{i}', 'a', keys)}
             AND v{i}.rn = {p}.n{i}
             AND v{i}.{ts} <= a.{ts} + INTERVAL {w} MINUTE""")
     pre_sel = ", ".join(
-        [f"a.{key}", f"a.{ts} AS a_ts", f"a.{id_col} AS a_id"]
+        [_key_cols("a", keys), f"a.{ts} AS a_ts", f"a.{id_col} AS a_id"]
         + [f"v{i}.{ts} AS v{i}_ts, v{i}.{id_col} AS v{i}_id"
            for i in range(1, loop_idx)])
     prev = "a" if loop_idx == 1 else f"v{loop_idx - 1}"
@@ -5405,12 +5183,12 @@ def match_recognize_times_combinations_oracle_sql(
             else:
                 p_ts, p_id = f"l{j - 1}.{ts}", f"l{j - 1}.{id_col}"
             joins.append(
-                f"""JOIN lrows l{j} ON l{j}.{key} = p.{key}
+                f"""JOIN lrows l{j} ON {_key_eq(f'l{j}', 'p', keys)}
                 AND (l{j}.{ts} > {p_ts} OR (l{j}.{ts} = {p_ts}
                      AND l{j}.{id_col} > {p_id}))
                 AND l{j}.{ts} <= p.a_ts + INTERVAL {w} MINUTE""")
         ks.append(f"""
-        SELECT p.{key}, {pre_carry.replace('a_ts', 'p.a_ts')
+        SELECT {_key_cols('p', keys)}, {pre_carry.replace('a_ts', 'p.a_ts')
                                   .replace('a_id', 'p.a_id')},
                l1.{id_col} AS loop_first_id,
                l{k}.{id_col} AS loop_last_id,
@@ -5426,7 +5204,7 @@ def match_recognize_times_combinations_oracle_sql(
     for pos, i in enumerate(suffix):
         src = "u.nb" if pos == 0 else f"s{suffix[pos - 1]}.n{i}"
         suf_joins.append(
-            f"""JOIN aug s{i} ON s{i}.{key} = u.{key}
+            f"""JOIN aug s{i} ON {_key_eq(f's{i}', 'u', keys)}
             AND s{i}.rn = {src}
             AND s{i}.{ts} <= u.a_ts + INTERVAL {w} MINUTE""")
     suf_sel = ", ".join(f"s{i}.{id_col} AS s{i}_id" for i in suffix)
@@ -5578,6 +5356,7 @@ def match_recognize_relaxed_define_oracle_sql(
     bits) scanned by the identical relaxed gap-class regex (RE2 agrees
     with Java regex on leftmost-first greedy/lazy settle order over
     plain char classes)."""
+    key = ", ".join(_key_list(key))
     _validate_defines(pattern)
     if _quant_min(pattern[0][2]) < 1:
         raise ValueError("mandatory first variable (see engine)")
@@ -5888,58 +5667,8 @@ def match_recognize_until_oracle_sql(
         plain + [("__U", types, "1") for types in until.values()]
     )
     regex = _until_regex(plain, until, chars)
-    return _relaxed_oracle_with(plain, chars, regex, [key],
-                                f"SELECT * FROM {table}",
-                                ts, type_col, id_col)
-
-
-def match_recognize_until_sessionized(
-    events: DataFrame,
-    pattern: list[tuple],
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Sessionized deployment shape for until-matching (the state-bound
-    form — matches cannot span a session gap; adds ``session_id``)."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_until(
-        s, pattern, key=[key, "session_id"],
-        ts=ts, type_col=type_col, id_col=id_col,
-    )
-
-
-def match_recognize_until_sessionized_oracle_sql(
-    pattern,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
-    """DuckDB SQL replaying :func:`match_recognize_until_sessionized`."""
-    plain, until = _split_until(pattern)
-    _validate_until(plain, until)
-    chars = _char_map(
-        plain + [("__U", types, "1") for types in until.values()]
-    )
-    regex = _until_regex(plain, until, chars)
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return _relaxed_oracle_with(plain, chars, regex, [key, "session_id"],
-                                source, ts, type_col, id_col)
+    return _relaxed_oracle_with(plain, chars, regex, _key_list(key),
+                                table, ts, type_col, id_col)
 
 
 def _validate_consecutive(plain, consecutive) -> set:
@@ -6062,59 +5791,8 @@ def match_recognize_consecutive_oracle_sql(
     consec = _validate_consecutive(pattern, consecutive)
     chars = _char_map(pattern)
     regex = _consec_regex(pattern, consec, chars)
-    return _relaxed_oracle_with(pattern, chars, regex, [key],
-                                f"SELECT * FROM {table}",
-                                ts, type_col, id_col)
-
-
-def match_recognize_consecutive_sessionized(
-    events: DataFrame,
-    pattern: list[tuple[str, object, str]],
-    consecutive,
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Sessionized deployment shape for strict-internal-loop matching
-    (adds ``session_id``; matches cannot span a session gap — the same
-    state bound as the other sessionized CEP shapes)."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_consecutive(
-        s, pattern, consecutive, key=[key, "session_id"],
-        ts=ts, type_col=type_col, id_col=id_col,
-    )
-
-
-def match_recognize_consecutive_sessionized_oracle_sql(
-    pattern,
-    consecutive,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
-    """DuckDB SQL replaying
-    :func:`match_recognize_consecutive_sessionized`."""
-    consec = _validate_consecutive(pattern, consecutive)
-    chars = _char_map(pattern)
-    regex = _consec_regex(pattern, consec, chars)
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return _relaxed_oracle_with(pattern, chars, regex, [key, "session_id"],
-                                source, ts, type_col, id_col)
+    return _relaxed_oracle_with(pattern, chars, regex, _key_list(key),
+                                table, ts, type_col, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -6309,17 +5987,14 @@ def match_recognize_relaxed_groups_oracle_sql(
     ts: str = "ts",
     type_col: str = "event_type",
     id_col: str = "event_id",
-    keys: list | None = None,
-    source_sql: str | None = None,
 ) -> str:
     """DuckDB SQL replaying :func:`match_recognize_relaxed_groups`
     (same alphabet, same per-element captured regex, token counts =
-    ';' counts over the captured spans). ``keys``/``source_sql``
-    support the sessionized composite-partition shape."""
+    ';' counts over the captured spans)."""
     flat, chars, regex, names = _relaxed_group_parts(pattern)
     case = " ".join(f"WHEN '{t}' THEN '{c}'" for t, c in chars.items())
-    key = ", ".join(keys) if keys else key
-    inner = source_sql or f"SELECT * FROM {table}"
+    key = ", ".join(_key_list(key))
+    inner = f"SELECT * FROM {table}"
     k = len(names)
     gcols = ",\n               ".join(
         f"regexp_extract_all(s, '{regex}', {i + 1}) AS g{i}" for i in range(k)
@@ -6352,53 +6027,6 @@ def match_recognize_relaxed_groups_oracle_sql(
            {tok_counts}
     FROM ex
     """
-
-
-def match_recognize_relaxed_groups_sessionized(
-    events: DataFrame,
-    pattern: list[tuple],
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Sessionized deployment shape for relaxed grouped matching
-    (adds ``session_id``; the group-iteration recursion depth and
-    skip-till-next state are both bounded by session length)."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_relaxed_groups(
-        s, pattern, key=[key, "session_id"],
-        ts=ts, type_col=type_col, id_col=id_col,
-    )
-
-
-def match_recognize_relaxed_groups_sessionized_oracle_sql(
-    pattern,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
-    """DuckDB SQL replaying
-    :func:`match_recognize_relaxed_groups_sessionized`."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return match_recognize_relaxed_groups_oracle_sql(
-        pattern, ts=ts, type_col=type_col, id_col=id_col,
-        keys=[key, "session_id"], source_sql=source,
-    )
 
 
 def _split_until_define(pattern):
@@ -6602,6 +6230,7 @@ def match_recognize_until_define_oracle_sql(
     """DuckDB SQL replaying :func:`match_recognize_until_define` (the
     define oracle's bitmask CTE with the stop define as bit k, scanned
     by the identical stop-piece regex)."""
+    key = ", ".join(_key_list(key))
     plain, until = _split_until_define(pattern)
     _validate_until_define(plain, until)
     i_u, stop = next(iter(until.items()))
@@ -6760,8 +6389,9 @@ def match_recognize_iterative(
     the scan inherently per-anchor (no precomputable failure index —
     the nb trick needs an anchor-independent flag), so the cost class
     is the documented anchored O(rows²) scan, bounded by session
-    length in :func:`match_recognize_iterative_sessionized` — the
-    deployment shape, same as the runagg family. AFTER MATCH: both
+    length when the input is sessionized (:func:`sessionize`, keyed
+    by ``[key, "session_id"]``) — the deployment shape, same as the
+    runagg family. AFTER MATCH: both
     skip policies via the same non-overlapping fold as runagg.
 
     The float product ``A.value * factor`` and the comparison run in
@@ -6967,8 +6597,6 @@ def match_recognize_iterative_oracle_sql(
     value_col: str = "value",
     min_loop: int = 1,
     skip: str = "past_last_row",
-    keys: list[str] | None = None,
-    source_sql: str | None = None,
     suffix_def: dict | None = None,
     within_minutes: int | None = None,
 ) -> str:
@@ -6986,7 +6614,7 @@ def match_recognize_iterative_oracle_sql(
         raise ValueError("min_loop must be 0 or 1")
     cmp = loop_def["cmp"]
     factor = float(loop_def["factor"])
-    klist = keys or [key]
+    klist = _key_list(key)
     key = ", ".join(klist)
     eq_r2c = " AND ".join(f"r2.{k} = c.{k}" for k in klist)
     eq_rfm = " AND ".join(f"rf.{k} = m1.{k}" for k in klist)
@@ -6997,7 +6625,7 @@ def match_recognize_iterative_oracle_sql(
     c_key = ", ".join(f"c.{k}" for k in klist)
     m1_key = ", ".join(f"m1.{k}" for k in klist)
     nx_key = ", ".join(f"nx.{k}" for k in klist)
-    inner = source_sql or f"SELECT * FROM {table}"
+    inner = f"SELECT * FROM {table}"
 
     def simple_sql(define: dict) -> str:
         conds = []
@@ -7111,76 +6739,6 @@ def match_recognize_iterative_oracle_sql(
         JOIN r rl ON {eq_rlm} AND rl.rn = m1.endrn
     ){numbering}
     """
-
-
-def match_recognize_iterative_sessionized(
-    events: DataFrame,
-    anchor_def: dict,
-    loop_def: dict,
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    min_loop: int = 1,
-    skip: str = "past_last_row",
-    suffix_def: dict | None = None,
-    within_minutes: int | None = None,
-    max_key_rows: int | None = _ANCHOR_SCAN_ROWS,
-) -> DataFrame:
-    """Sessionized deployment shape for iterative conditions: the
-    per-anchor scan is bounded by SESSION length instead of key
-    history — the same envelope closure as the runagg/PREV sessionized
-    shapes. Output adds ``session_id``. ``suffix_def`` (PATTERN
-    (A B+ C)) and ``within_minutes`` (Flink ``.within()``) thread
-    through to the flat engine (ADVICE r11: the sessionized wrapper
-    previously could not compose with the suffix/within features), so
-    the deployment shape covers every flat-engine pattern form."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_iterative(
-        s, anchor_def, loop_def, key=[key, "session_id"], ts=ts,
-        type_col=type_col, id_col=id_col, value_col=value_col,
-        min_loop=min_loop, skip=skip, suffix_def=suffix_def,
-        within_minutes=within_minutes, max_key_rows=max_key_rows,
-    )
-
-
-def match_recognize_iterative_sessionized_oracle_sql(
-    anchor_def: dict,
-    loop_def: dict,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    min_loop: int = 1,
-    skip: str = "past_last_row",
-    suffix_def: dict | None = None,
-    within_minutes: int | None = None,
-) -> str:
-    """DuckDB replay of :func:`match_recognize_iterative_sessionized`
-    (the shared sessionize window, then the iterative replay over the
-    composite (key, session_id) partition)."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return match_recognize_iterative_oracle_sql(
-        anchor_def, loop_def, ts=ts, type_col=type_col, id_col=id_col,
-        value_col=value_col, min_loop=min_loop, skip=skip,
-        keys=[key, "session_id"], source_sql=source,
-        suffix_def=suffix_def, within_minutes=within_minutes,
-    )
 
 
 # --------------------------------------------------------------------------
@@ -7331,8 +6889,8 @@ def match_recognize_followed_by_iterative(
     anchor-relative threshold makes the scan per-anchor, so the FLAT
     form is the documented anchored O(rows²) hot-key class (HOTKEY.json
     quantifies it; same as the strict iterative family) — deploy
-    :func:`match_recognize_followed_by_iterative_sessionized` or the
-    within-bounded form. Round 13 (ADVICE r12 medium): the within
+    it over :func:`sessionize` keyed by ``[key, "session_id"]``, or
+    the within-bounded form. Round 13 (ADVICE r12 medium): the within
     truncation is REAL — each row's in-window extent is precomputed
     once with a RANGE window frame, so the per-anchor scan touches
     exactly the in-window rows, and the hot-key gate stays ACTIVE
@@ -7652,8 +7210,6 @@ def match_recognize_followed_by_iterative_oracle_sql(
     value_col: str = "value",
     min_loop: int = 1,
     skip: str = "past_last_row",
-    keys: list[str] | None = None,
-    source_sql: str | None = None,
     within_minutes: int | None = None,
     emit: str = "greedy",
     consume: str = "skip",
@@ -7687,7 +7243,7 @@ def match_recognize_followed_by_iterative_oracle_sql(
     cmp = loop_def["cmp"]
     factor = float(loop_def["factor"])
     ref = loop_def.get("ref") or "anchor"
-    klist = keys or [key]
+    klist = _key_list(key)
     key = ", ".join(klist)
     eq_r2c = " AND ".join(f"r2.{k} = c.{k}" for k in klist)
     eq_r2ch = " AND ".join(f"r2.{k} = ch.{k}" for k in klist)
@@ -7701,7 +7257,7 @@ def match_recognize_followed_by_iterative_oracle_sql(
     c_key = ", ".join(f"c.{k}" for k in klist)
     m1_key = ", ".join(f"m1.{k}" for k in klist)
     nx_key = ", ".join(f"nx.{k}" for k in klist)
-    inner = source_sql or f"SELECT * FROM {table}"
+    inner = f"SELECT * FROM {table}"
 
     a_conds = []
     if anchor_def.get("types"):
@@ -8001,77 +7557,6 @@ def match_recognize_followed_by_iterative_oracle_sql(
     """
 
 
-def match_recognize_followed_by_iterative_sessionized(
-    events: DataFrame,
-    anchor_def: dict,
-    loop_def: dict,
-    gap_minutes: int,
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    min_loop: int = 1,
-    skip: str = "past_last_row",
-    within_minutes: int | None = None,
-    max_key_rows: int | None = _ANCHOR_SCAN_ROWS,
-    consume: str = "skip",
-) -> DataFrame:
-    """Sessionized deployment shape for relaxed-linking iterative
-    conditions: the per-anchor scan (and the greedy loop extent) is
-    bounded by SESSION length instead of key history — the same
-    envelope closure as every other sessionized CEP shape. Output
-    adds ``session_id``. ``within_minutes`` composes (both bounds
-    apply; the tighter one wins per anchor); ``consume='readmit'``
-    composes too (the NFA fold runs per (key, session) partition —
-    Flink jobs bound SKIP_PAST_LAST_EVENT state the same way)."""
-    s = sessionize(events, gap_minutes, key, ts, id_col)
-    return match_recognize_followed_by_iterative(
-        s, anchor_def, loop_def, key=[key, "session_id"], ts=ts,
-        type_col=type_col, id_col=id_col, value_col=value_col,
-        min_loop=min_loop, skip=skip, within_minutes=within_minutes,
-        max_key_rows=max_key_rows, consume=consume,
-    )
-
-
-def match_recognize_followed_by_iterative_sessionized_oracle_sql(
-    anchor_def: dict,
-    loop_def: dict,
-    gap_minutes: int,
-    table: str = "events",
-    key: str = "user_id",
-    ts: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    min_loop: int = 1,
-    skip: str = "past_last_row",
-    within_minutes: int | None = None,
-    consume: str = "skip",
-) -> str:
-    """DuckDB replay of
-    :func:`match_recognize_followed_by_iterative_sessionized` (the
-    shared sessionize window, then the relaxed-iterative replay over
-    the composite (key, session_id) partition)."""
-    source = f"""
-        SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-               CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR {ts} > prev_ts + INTERVAL {int(gap_minutes)} MINUTE
-                         THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY {key} ORDER BY {ts}, {id_col}
-                          ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS session_id
-        FROM (SELECT {key}, {ts}, {id_col}, {type_col}, {value_col},
-                     lag({ts}) OVER (PARTITION BY {key}
-                                     ORDER BY {ts}, {id_col}) AS prev_ts
-              FROM {table})"""
-    return match_recognize_followed_by_iterative_oracle_sql(
-        anchor_def, loop_def, ts=ts, type_col=type_col, id_col=id_col,
-        value_col=value_col, min_loop=min_loop, skip=skip,
-        keys=[key, "session_id"], source_sql=source,
-        within_minutes=within_minutes, consume=consume,
-    )
-
-
 # --------------------------------------------------------------------------
 # Trailing notFollowedBy + within (round 12 — VERDICT r11 missing #3):
 # Flink allows a pattern to END with notFollowedBy() only when a
@@ -8191,11 +7676,13 @@ def match_recognize_not_followed_by_end_oracle_sql(
     oracle as a derived table, the same NOT EXISTS absence window
     ((ts, id)-ordered lower bound, closed upper bound), the same
     per-key renumbering."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     ftypes = _types_of(forbid)
     if not ftypes:
         raise ValueError("forbid must name at least one event type")
     inner = match_recognize_relaxed_within_oracle_sql(
-        pattern, within_minutes, table=table, key=key, ts=ts,
+        pattern, within_minutes, table=table, key=keys, ts=ts,
         type_col=type_col, id_col=id_col,
     )
     alts = ", ".join(f"'{t}'" for t in ftypes)
@@ -8208,13 +7695,13 @@ def match_recognize_not_followed_by_end_oracle_sql(
     FROM (
         SELECT m.*
         FROM ({inner}) m
-        JOIN {table} ef ON ef.{key} = m.{key}
+        JOIN {table} ef ON {_key_eq('ef', 'm', keys)}
              AND ef.{id_col} = m.first_event_id
-        JOIN {table} el ON el.{key} = m.{key}
+        JOIN {table} el ON {_key_eq('el', 'm', keys)}
              AND el.{id_col} = m.last_event_id
         WHERE NOT EXISTS (
             SELECT 1 FROM {table} f
-            WHERE f.{key} = m.{key}
+            WHERE {_key_eq('f', 'm', keys)}
               AND f.{type_col} IN ({alts})
               AND (f.{ts} > el.{ts}
                    OR (f.{ts} = el.{ts} AND f.{id_col} > m.last_event_id))
@@ -8391,24 +7878,26 @@ def match_recognize_not_followed_by_interior_oracle_sql(
     within oracle extended with the same capture-group boundary-id
     extraction, per-edge boundary-row joins, the same strictly-between
     (ts, id)-ordered NOT EXISTS per edge, the same renumbering."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     edges = _validate_not_between(pattern, not_between)
     inner = match_recognize_relaxed_within_oracle_sql(
-        pattern, within_minutes, table=table, key=key, ts=ts,
+        pattern, within_minutes, table=table, key=keys, ts=ts,
         type_col=type_col, id_col=id_col, _edges=tuple(sorted(edges)),
     )
     var_cols = ", ".join(f"n_{var.lower()}" for var, _, _ in pattern)
     joins = "".join(
         f"""
-        JOIN {table} lo{i} ON lo{i}.{key} = m.{key}
+        JOIN {table} lo{i} ON {_key_eq(f'lo{i}', 'm', keys)}
              AND lo{i}.{id_col} = m._lo_id_e{i}
-        JOIN {table} hi{i} ON hi{i}.{key} = m.{key}
+        JOIN {table} hi{i} ON {_key_eq(f'hi{i}', 'm', keys)}
              AND hi{i}.{id_col} = m._hi_id_e{i}"""
         for i in sorted(edges)
     )
     absent = " AND ".join(
         f"""NOT EXISTS (
             SELECT 1 FROM {table} f
-            WHERE f.{key} = m.{key}
+            WHERE {_key_eq('f', 'm', keys)}
               AND f.{type_col} IN ({', '.join(f"'{t}'" for t in ftypes)})
               AND (f.{ts} > lo{i}.{ts}
                    OR (f.{ts} = lo{i}.{ts} AND f.{id_col} > m._lo_id_e{i}))
@@ -8601,6 +8090,8 @@ def _all_rows_running_tail(inner: str, subsets: dict, table: str,
                            value_col: str) -> str:
     """Shared value-join + RUNNING/FINAL window tail over any ALL ROWS
     oracle (type or DEFINE engine — identical output contract)."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     run = (f"PARTITION BY {key}, match_no ORDER BY row_in_match "
            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
     fin = f"PARTITION BY {key}, match_no"
@@ -8629,7 +8120,7 @@ def _all_rows_running_tail(inner: str, subsets: dict, table: str,
     FROM (
         SELECT m.*, CAST(e.{value_col} AS DOUBLE) AS value
         FROM ({inner}) m
-        JOIN {table} e ON e.{key} = m.{key} AND e.{id_col} = m.event_id
+        JOIN {table} e ON {_key_eq('e', 'm', keys)} AND e.{id_col} = m.event_id
     ) jm
     """
 
@@ -8920,8 +8411,6 @@ def match_recognize_within_step_oracle_sql(
     type_col: str = "event_type",
     id_col: str = "event_id",
     skip: str = "past_last_row",
-    keys: list[str] | None = None,
-    source_sql: str | None = None,
     links: set | frozenset | None = None,
 ) -> str:
     """DuckDB replay of :func:`match_recognize_within_step`: the same
@@ -8938,10 +8427,10 @@ def match_recognize_within_step_oracle_sql(
     if skip not in ("past_last_row", "to_next_row"):
         raise ValueError("skip must be 'past_last_row' or 'to_next_row'")
     strict = _validate_within_step_links(pattern, links)
-    klist = keys or [key]
+    klist = _key_list(key)
     key = ", ".join(klist)
     k = len(pattern)
-    inner = source_sql or f"SELECT * FROM {table}"
+    inner = f"SELECT * FROM {table}"
     order = f"PARTITION BY {key} ORDER BY {ts}, {id_col}"
     nxt_sql = ",\n               ".join(
         (
@@ -9293,6 +8782,8 @@ def match_recognize_not_next_end_oracle_sql(
     NULL-or-not-forbidden successor check, and the shared recursive
     non-overlap fold for past_last_row. Quantified trailing variables
     (round 16) replay the next-non-run-row tabulation + run-end join."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     if not pattern:
         raise ValueError("pattern needs at least one variable")
     for i, (var, etype, quant) in enumerate(pattern):
@@ -9317,7 +8808,7 @@ def match_recognize_not_next_end_oracle_sql(
                 f"variable {pattern[-1][0]!r}: greedy min>=1 "
                 "quantifier required for the tabulated-run form")
         return _not_next_end_quantified_oracle_sql(
-            pattern, ftypes, t_lo, t_hi, table, key, ts, type_col,
+            pattern, ftypes, t_lo, t_hi, table, keys, ts, type_col,
             id_col, skip)
     alts = ", ".join(f"'{t}'" for t in ftypes)
     order = f"PARTITION BY {key} ORDER BY {ts}, {id_col}"
@@ -9341,14 +8832,14 @@ def match_recognize_not_next_end_oracle_sql(
         SELECT {key}, off, first_event_id, last_event_id, 1 AS match_no
         FROM cand c
         WHERE off = (SELECT min(off) FROM cand c2
-                     WHERE c2.{key} = c.{key})
+                     WHERE {_key_eq('c2', 'c', keys)})
       UNION ALL
-        SELECT nx.{key}, nx.off, nx.first_event_id, nx.last_event_id,
+        SELECT {_key_cols('nx', keys)}, nx.off, nx.first_event_id, nx.last_event_id,
                pk.match_no + 1
         FROM pick pk JOIN cand nx
-             ON nx.{key} = pk.{key} AND nx.off >= pk.off + {k}
+             ON {_key_eq('nx', 'pk', keys)} AND nx.off >= pk.off + {k}
         WHERE nx.off = (SELECT min(n2.off) FROM cand n2
-                        WHERE n2.{key} = pk.{key}
+                        WHERE {_key_eq('n2', 'pk', keys)}
                           AND n2.off >= pk.off + {k})
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,
@@ -9381,6 +8872,8 @@ def _not_next_end_quantified_oracle_sql(
     """DuckDB replay of the quantified-tail trailing-notNext lowering
     (round 16): identical next-non-run-row tabulation, prefix flag
     conjunction, run-end join and (off, endrn) non-overlap fold."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     k1 = len(pattern) - 1
     alts = ", ".join(f"'{t}'" for t in ftypes)
     order = f"PARTITION BY {key} ORDER BY {ts}, {id_col}"
@@ -9408,14 +8901,14 @@ def _not_next_end_quantified_oracle_sql(
                n_rows, 1 AS match_no
         FROM m c
         WHERE off = (SELECT min(off) FROM m c2
-                     WHERE c2.{key} = c.{key})
+                     WHERE {_key_eq('c2', 'c', keys)})
       UNION ALL
-        SELECT nx.{key}, nx.off, nx.endrn, nx.first_event_id,
+        SELECT {_key_cols('nx', keys)}, nx.off, nx.endrn, nx.first_event_id,
                nx.last_event_id, nx.n_rows, pk.match_no + 1
         FROM pick pk JOIN m nx
-             ON nx.{key} = pk.{key} AND nx.off > pk.endrn
+             ON {_key_eq('nx', 'pk', keys)} AND nx.off > pk.endrn
         WHERE nx.off = (SELECT min(n2.off) FROM m n2
-                        WHERE n2.{key} = pk.{key}
+                        WHERE {_key_eq('n2', 'pk', keys)}
                           AND n2.off > pk.endrn)
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,
@@ -9452,10 +8945,10 @@ def _not_next_end_quantified_oracle_sql(
         WHERE ok AND run_len >= {t_lo}
     ),
     m AS (
-        SELECT c.{key}, c.off, c.endrn, c.first_event_id,
+        SELECT {_key_cols('c', keys)}, c.off, c.endrn, c.first_event_id,
                CAST(e.{id_col} AS BIGINT) AS last_event_id, c.n_rows
         FROM cand c JOIN r e
-             ON e.{key} = c.{key} AND e.rn = c.endrn
+             ON {_key_eq('e', 'c', keys)} AND e.rn = c.endrn
         WHERE e.nxt_t IS NULL OR e.nxt_t NOT IN ({alts})
     ){numbering}
     """
@@ -9629,6 +9122,8 @@ def match_recognize_not_next_oracle_sql(
     COALESCE(NOT lead(type IN forbid, i+1), TRUE) conjunct per
     notNext edge, and the shared recursive non-overlap fold for
     past_last_row."""
+    keys = _key_list(key)
+    key = ", ".join(keys)
     checks = _validate_not_next(pattern, not_next)
     if skip not in ("past_last_row", "to_next_row"):
         raise ValueError("skip must be 'past_last_row' or 'to_next_row'")
@@ -9665,14 +9160,14 @@ def match_recognize_not_next_oracle_sql(
         SELECT {key}, off, first_event_id, last_event_id, 1 AS match_no
         FROM cand c
         WHERE off = (SELECT min(off) FROM cand c2
-                     WHERE c2.{key} = c.{key})
+                     WHERE {_key_eq('c2', 'c', keys)})
       UNION ALL
-        SELECT nx.{key}, nx.off, nx.first_event_id, nx.last_event_id,
+        SELECT {_key_cols('nx', keys)}, nx.off, nx.first_event_id, nx.last_event_id,
                pk.match_no + 1
         FROM pick pk JOIN cand nx
-             ON nx.{key} = pk.{key} AND nx.off >= pk.off + {k}
+             ON {_key_eq('nx', 'pk', keys)} AND nx.off >= pk.off + {k}
         WHERE nx.off = (SELECT min(n2.off) FROM cand n2
-                        WHERE n2.{key} = pk.{key}
+                        WHERE {_key_eq('n2', 'pk', keys)}
                           AND n2.off >= pk.off + {k})
     )
     SELECT {key}, CAST(match_no AS BIGINT) AS match_no,

@@ -27,32 +27,32 @@ Edge / modifier → engine mapping (the dispatch table):
 ========================================  ==================================
 composition                               engine (operators/cep.py)
 ========================================  ==================================
-all ``next`` edges, loops consecutive     match_recognize [/ _within /
-                                          _sessionized]
-``followed_by`` edges (default)           match_recognize_relaxed [/ _within
-                                          / _sessionized], links = the
-                                          ``next``-edge variables
+all ``next`` edges, loops consecutive     match_recognize [/ _within]
+``followed_by`` edges (default)           match_recognize_relaxed [/ _within],
+                                          links = the ``next``-edge
+                                          variables
 ``followed_by_any`` edges                 match_recognize_followed_by_any
 ``greedy()`` / default loop preference    greedy_pattern desugar → relaxed
 ``consecutive()`` with relaxed edges      match_recognize_consecutive
-                                          [/ _sessionized]
 ``allow_combinations()``                  match_recognize_times_combinations
 ``until(...)``                            match_recognize_until[_define]
-                                          [/ _sessionized]
 trailing ``not_followed_by`` + within     match_recognize_not_followed_by_end
 interior ``not_followed_by`` + within     match_recognize_not_followed_by_
                                           interior
 trailing / interior ``not_next``          match_recognize_not_next_end /
                                           match_recognize_not_next
 value conditions (``cond=``)              match_recognize[_relaxed]_define
-                                          [/ _within / _sessionized]
+                                          [/ _within]
 running-aggregate conditions              match_recognize_runagg
-(``cond={"agg": ...}``)                   [/ _sessionized]
+(``cond={"agg": ...}``)
 strict edges + AFTER MATCH SKIP           match_recognize_define with
                                           types-only conditions
 group elements (``next_group`` /          match_recognize_groups /
 ``followed_by_group``, list or nested     match_recognize_relaxed_groups
-``Pattern`` body)                         [/ _sessionized]
+``Pattern`` body)
+``sessionized(gap)`` on any of the        ``sessionize(events, gap)``, then
+strict / relaxed / consecutive / until /  the row's engine keyed by
+DEFINE / runagg / group rows              ``[key, "session_id"]``
 ========================================  ==================================
 
 Flink's default (non-greedy) loop preference is honored exactly as
@@ -68,8 +68,9 @@ declared keys.
 
 ``sessionized(gap_minutes)`` is NOT Flink API — it is this engine
 family's documented hot-key deployment shape (SCALE.md), exposed on
-the builder so the compiled pattern can target the sessionized
-engine variants.
+the builder as a composition: the compiled pattern sessionizes the
+events (``oracle_sql`` wraps the table in ``sessionize_oracle_sql``)
+and runs the same engine per (key, session).
 
 Reference: /root/reference/README.md:1 (no reference code exists;
 API shape and semantics from the public Flink CEP Pattern API docs —
@@ -182,23 +183,41 @@ def _norm(types: tuple):
 class CompiledPattern:
     """A validated, dispatched pattern: ``engine`` names the cep.py
     function (asserted in tests; shown in error messages), ``apply``
-    runs it, ``oracle_sql`` builds the paired DuckDB oracle."""
+    runs it, ``oracle_sql`` builds the paired DuckDB oracle. With
+    ``gap_minutes`` set, both first sessionize their input and then
+    partition the engine by ``[key, "session_id"]``."""
     engine: str
     _df_fn: Callable = field(repr=False)
     _df_args: tuple = field(repr=False)
     _df_kwargs: dict = field(repr=False)
     _oracle_fn: Callable | None = field(repr=False)
+    gap_minutes: int | None = None
+
+    def _kwargs(self, cols: dict) -> tuple[dict, tuple | None]:
+        """The engine kwargs, plus the (key, ts, id_col) sessionize
+        groups by when the pattern is sessionized (None otherwise)."""
+        kwargs = {**self._df_kwargs, **cols}
+        if self.gap_minutes is None:
+            return kwargs, None
+        by = (kwargs.get("key", "user_id"), kwargs.get("ts", "ts"),
+              kwargs.get("id_col", "event_id"))
+        kwargs["key"] = [by[0], "session_id"]
+        return kwargs, by
 
     def apply(self, events: DataFrame, **cols) -> DataFrame:
-        return self._df_fn(events, *self._df_args,
-                           **{**self._df_kwargs, **cols})
+        kwargs, by = self._kwargs(cols)
+        if by:
+            events = cep.sessionize(events, self.gap_minutes, *by)
+        return self._df_fn(events, *self._df_args, **kwargs)
 
     def oracle_sql(self, table: str = "events", **cols) -> str:
         if self._oracle_fn is None:
             raise ValueError(
                 f"engine {self.engine} has no paired oracle builder")
-        return self._oracle_fn(*self._df_args, table=table,
-                               **{**self._df_kwargs, **cols})
+        kwargs, by = self._kwargs(cols)
+        if by:
+            table = cep.sessionize_oracle_sql(table, self.gap_minutes, *by)
+        return self._oracle_fn(*self._df_args, table=table, **kwargs)
 
 
 class Pattern:
@@ -478,27 +497,25 @@ class Pattern:
                 "or call sessionized(gap) first")
         compiled = self.compile()
         matcher_by_engine = {
-            "match_recognize_sessionized": "types",
-            "match_recognize_relaxed_sessionized": "relaxed",
-            "match_recognize_until_sessionized": "until",
-            "match_recognize_consecutive_sessionized": "consecutive",
-            "match_recognize_relaxed_groups_sessionized":
-                "relaxed_groups",
-            "match_recognize_define_sessionized": "define",
-            "match_recognize_runagg_sessionized": "runagg",
+            "match_recognize": "types",
+            "match_recognize_relaxed": "relaxed",
+            "match_recognize_until": "until",
+            "match_recognize_consecutive": "consecutive",
+            "match_recognize_relaxed_groups": "relaxed_groups",
+            "match_recognize_define": "define",
+            "match_recognize_runagg": "runagg",
         }
         matcher = matcher_by_engine.get(compiled.engine)
         if matcher is None:
             raise ValueError(
                 f"engine {compiled.engine} has no SessionCepSink "
                 "matcher — the sink covers the types/relaxed/until/"
-                "consecutive/relaxed_groups/define/runagg sessionized "
-                "families")
+                "consecutive/relaxed_groups/define/runagg families")
         if compiled._df_kwargs.get("links"):
             raise ValueError(
                 "SessionCepSink's relaxed matcher has no strict-edge "
                 "links hook — spell the pattern all-followedBy, or "
-                "run the batch sessionized engine directly")
+                "run sessionize() + match_recognize_relaxed in batch")
         extra = dict(sink_kw)
         if matcher == "consecutive":
             extra["consecutive"] = compiled._df_args[1]
@@ -574,20 +591,17 @@ def _compile(p: Pattern) -> CompiledPattern:
     default_skip = p._skip == "past_last_row"
     within = p._within_minutes
     gap = p._gap_minutes
-    if within is not None and gap is not None:
-        raise ValueError(
-            "within() and sessionized() are alternative state bounds "
-            "— the engine family has no sessionized-within variant; "
-            "pick one")
 
     cols: dict = {}
 
     def done(engine: str, args: tuple, kwargs: dict,
              oracle: str | None) -> CompiledPattern:
+        # a branch that cannot sessionize bails on gap before this
         return CompiledPattern(
             engine=engine, _df_fn=getattr(cep, engine), _df_args=args,
             _df_kwargs=kwargs,
-            _oracle_fn=getattr(cep, oracle) if oracle else None)
+            _oracle_fn=getattr(cep, oracle) if oracle else None,
+            gap_minutes=gap)
 
     # ---- allowCombinations -----------------------------------------
     if has_comb:
@@ -650,16 +664,6 @@ def _compile(p: Pattern) -> CompiledPattern:
             _bail("until()", base,
                   "whose edges are all followedBy (relaxed)")
         pat = [s.entry(define_mode) for s in pos]
-        if gap is not None:
-            if define_mode:
-                _bail("until(cond=...) with sessionized()",
-                      "match_recognize_until_define",
-                      "which has no sessionized variant yet — the "
-                      "types-stop engine (match_recognize_until_"
-                      "sessionized) is the sessionized form")
-            eng = "match_recognize_until_sessionized"
-            return done(eng, (pat,), {"gap_minutes": gap, **cols},
-                        eng + "_oracle_sql")
         return done(base, (pat,), cols, base + "_oracle_sql")
 
     # ---- non-consuming notFollowedBy -------------------------------
@@ -785,11 +789,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                       "consecutive() to opt into that semantic "
                       "(Flink's default relaxed interior is the "
                       "followedBy family)")
-            if gap is not None:
-                _bail("sessionized() with a strict group chain",
-                      "match_recognize_groups",
-                      "which has no sessionized variant — the "
-                      "relaxed family carries the sessionized form")
             eng = "match_recognize_groups"
             return done(eng, (pat,), cols, eng + "_oracle_sql")
         if not all_relaxed_edges:
@@ -804,10 +803,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                   "all-next() chain with consecutive loops is the "
                   "strict engine")
         base = "match_recognize_relaxed_groups"
-        if gap is not None:
-            eng = base + "_sessionized"
-            return done(eng, (pat,), {"gap_minutes": gap, **cols},
-                        eng + "_oracle_sql")
         return done(base, (pat,), cols, base + "_oracle_sql")
 
     # ---- running-aggregate DEFINE (Flink iterative condition) ------
@@ -828,14 +823,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                   "builder covers the strict runagg chain "
                   "(next() edges)")
         pat = [s.entry(True) for s in pos]
-        if gap is not None:
-            if not default_skip:
-                _bail("sessionized() + skip strategy",
-                      base + "_sessionized",
-                      "which fixes the default AFTER MATCH SKIP")
-            eng = base + "_sessionized"
-            return done(eng, (pat,), {"gap_minutes": gap, **cols},
-                        eng + "_oracle_sql")
         return done(base, (pat,), {"skip": p._skip, **cols},
                     base + "_oracle_sql")
 
@@ -855,14 +842,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                 eng = base + "_within"
                 return done(eng, (pat,),
                             {"within_minutes": within, **cols},
-                            eng + "_oracle_sql")
-            if gap is not None:
-                if not default_skip:
-                    _bail("sessionized() + skip strategy",
-                          base + "_sessionized",
-                          "which fixes the default AFTER MATCH SKIP")
-                eng = base + "_sessionized"
-                return done(eng, (pat,), {"gap_minutes": gap, **cols},
                             eng + "_oracle_sql")
             return done(base, (pat,), {"skip": p._skip, **cols},
                         base + "_oracle_sql")
@@ -904,11 +883,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                   "is the strict engine (match_recognize)")
         consec = tuple(s.name for s in pos if s.consecutive)
         pat = [s.entry(False) for s in pos]
-        if gap is not None:
-            eng = "match_recognize_consecutive_sessionized"
-            return done(eng, (pat, consec),
-                        {"gap_minutes": gap, **cols},
-                        eng + "_oracle_sql")
         return done(eng, (pat, consec), cols, eng + "_oracle_sql")
 
     # ---- fully strict: MATCH_RECOGNIZE default contiguity ----------
@@ -929,20 +903,17 @@ def _compile(p: Pattern) -> CompiledPattern:
                    for _, t, _ in pat):
                 _bail("where_not() + skip strategy", eng,
                       "whose type conditions are positive classes")
-            if within is not None or gap is not None:
-                _bail("skip strategy + within()/sessionized()", eng,
-                      "which exposes them separately — compose one "
-                      "at a time")
+            if within is not None:
+                _bail("skip strategy + within()", eng,
+                      "which has no within form with AFTER MATCH SKIP "
+                      "(match_recognize_define_within fixes the "
+                      "default)")
             dpat = [(v, {"types": t}, q) for v, t, q in pat]
             return done(eng, (dpat,), {"skip": p._skip, **cols},
                         eng + "_oracle_sql")
         if within is not None:
             eng = base + "_within"
             return done(eng, (pat,), {"within_minutes": within, **cols},
-                        eng + "_oracle_sql")
-        if gap is not None:
-            eng = base + "_sessionized"
-            return done(eng, (pat,), {"gap_minutes": gap, **cols},
                         eng + "_oracle_sql")
         return done(base, (pat,), cols, base + "_oracle_sql")
 
@@ -966,11 +937,6 @@ def _compile(p: Pattern) -> CompiledPattern:
                   "machinery)")
         eng = base + "_within"
         return done(eng, (pat,), {"within_minutes": within, **kw},
-                    eng + "_oracle_sql")
-    if gap is not None:
-        eng = base + "_sessionized"
-        return done(eng, (pat,),
-                    {"gap_minutes": gap, "skip": p._skip, **kw},
                     eng + "_oracle_sql")
     return done(base, (pat,), {"skip": p._skip, **kw},
                 base + "_oracle_sql")

@@ -27,8 +27,6 @@ from ..operators.cep import (
     match_recognize_define_oracle_sql,
     match_recognize_define_within,
     match_recognize_define_within_oracle_sql,
-    match_recognize_define_sessionized,
-    match_recognize_define_sessionized_oracle_sql,
     match_recognize_groups,
     match_recognize_groups_oracle_sql,
     match_recognize_oracle_sql,
@@ -36,8 +34,6 @@ from ..operators.cep import (
     match_recognize_permute_oracle_sql,
     match_recognize_relaxed,
     match_recognize_relaxed_oracle_sql,
-    match_recognize_relaxed_sessionized,
-    match_recognize_relaxed_sessionized_oracle_sql,
     match_recognize_relaxed_all_rows,
     match_recognize_relaxed_all_rows_oracle_sql,
     match_recognize_relaxed_not,
@@ -56,41 +52,29 @@ from ..operators.cep import (
     match_recognize_relaxed_within,
     match_recognize_followed_by_any,
     match_recognize_followed_by_any_oracle_sql,
-    match_recognize_followed_by_any_sessionized,
-    match_recognize_followed_by_any_sessionized_oracle_sql,
     match_recognize_relaxed_define,
     match_recognize_relaxed_define_oracle_sql,
     match_recognize_relaxed_within_oracle_sql,
     match_recognize_until,
     match_recognize_until_oracle_sql,
-    match_recognize_until_sessionized,
-    match_recognize_until_sessionized_oracle_sql,
     match_recognize_consecutive,
     match_recognize_consecutive_oracle_sql,
     match_recognize_relaxed_groups,
     match_recognize_relaxed_groups_oracle_sql,
-    match_recognize_relaxed_groups_sessionized,
-    match_recognize_relaxed_groups_sessionized_oracle_sql,
     match_recognize_until_define,
     match_recognize_until_define_oracle_sql,
     match_recognize_iterative,
     match_recognize_iterative_oracle_sql,
-    match_recognize_iterative_sessionized,
-    match_recognize_iterative_sessionized_oracle_sql,
     match_recognize_followed_by_iterative,
     match_recognize_followed_by_iterative_oracle_sql,
-    match_recognize_followed_by_iterative_sessionized,
-    match_recognize_followed_by_iterative_sessionized_oracle_sql,
     match_recognize_runagg,
     match_recognize_runagg_oracle_sql,
-    match_recognize_runagg_sessionized,
-    match_recognize_runagg_sessionized_oracle_sql,
-    match_recognize_sessionized,
-    match_recognize_sessionized_oracle_sql,
     match_recognize_within,
     match_recognize_within_oracle_sql,
     match_recognize_within_step,
     match_recognize_within_step_oracle_sql,
+    sessionize,
+    sessionize_oracle_sql,
 )
 from ..operators.cumulate import cumulate_window
 from ..operators.funnel import funnel
@@ -357,12 +341,20 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The sessionized keys below compose sessionize() with a flat engine:
+# 12-hour sessions per user, then the pattern per (user, session) — the
+# oracle reads the same sessions from CEP_SESSIONS_SQL.
+CEP_GAP = 720
+CEP_SESSION_KEY = ("user_id", "session_id")
+CEP_SESSIONS_SQL = sessionize_oracle_sql("events", CEP_GAP)
+
+
 @query(
     "q_cep_sessionized",
-    oracle=match_recognize_sessionized_oracle_sql(
+    oracle=match_recognize_oracle_sql(
         [("V", "view", "1"), ("CE", ("click", "error"), "*"),
          ("P", "purchase", "1")],
-        gap_minutes=720,
+        table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY,
     ),
 )
 def q_cep_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,12 +364,12 @@ def q_cep_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     session gap; per-group state is bounded by session length. One
     sort-shuffle on user_id shared by the sessionize window and the
     per-session aggregation."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_sessionized(
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize(
         ev,
         [("V", "view", "1"), ("CE", ("click", "error"), "*"),
          ("P", "purchase", "1")],
-        gap_minutes=720,
+        key=CEP_SESSION_KEY,
     )
 
 
@@ -501,8 +493,9 @@ def q_cep_mixed_links_within(spark: SparkSession,
 
 
 @query("q_cep_mixed_links_sessionized",
-       oracle=match_recognize_relaxed_sessionized_oracle_sql(
-           CEP_MIXED_PATTERN, gap_minutes=720, links=CEP_MIXED_LINKS))
+       oracle=match_recognize_relaxed_oracle_sql(
+           CEP_MIXED_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY,
+           links=CEP_MIXED_LINKS))
 def q_cep_mixed_links_sessionized(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Mixed strict/relaxed edges in the SESSIONIZED deployment shape
@@ -513,9 +506,9 @@ def q_cep_mixed_links_sessionized(spark: SparkSession,
     session bounds the token string on hot keys (the relaxed family's
     standing deployment rule). Same regex on both sides; the oracle
     sessionizes with the shared running-gap islands CTE."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_relaxed_sessionized(
-        ev, CEP_MIXED_PATTERN, gap_minutes=720, links=CEP_MIXED_LINKS)
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_relaxed(
+        ev, CEP_MIXED_PATTERN, key=CEP_SESSION_KEY, links=CEP_MIXED_LINKS)
 
 
 CEP_FB_SKIP_PATTERN = [
@@ -643,18 +636,16 @@ def q_cep_followed_by_within(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_followed_by_sessionized",
-       oracle=match_recognize_relaxed_sessionized_oracle_sql(
-           CEP_FB_PATTERN, gap_minutes=720))
+       oracle=match_recognize_relaxed_oracle_sql(
+           CEP_FB_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY))
 def q_cep_followed_by_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized relaxed CEP — the 100 TB deployment shape: 12-hour
     sessions per user, then followedBy PATTERN (V C+ P) within each
     session, so skip-till-next state cannot span a key's whole history.
     One sort-shuffle on user_id shared by the sessionize window and the
     per-session token aggregation."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_relaxed_sessionized(
-        ev, CEP_FB_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_relaxed(ev, CEP_FB_PATTERN, key=CEP_SESSION_KEY)
 
 
 # followedByAny: single-occurrence steps (validated), 24 h within —
@@ -719,8 +710,8 @@ def q_cep_followed_by_define(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_followed_by_any_sessionized",
-       oracle=match_recognize_followed_by_any_sessionized_oracle_sql(
-           CEP_FBA_PATTERN, gap_minutes=720))
+       oracle=match_recognize_followed_by_any_oracle_sql(
+           CEP_FBA_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY))
 def q_cep_followed_by_any_sessionized(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     """Sessionized followedByAny — the deployment shape the streaming
@@ -732,10 +723,9 @@ def q_cep_followed_by_any_sessionized(spark: SparkSession,
     set is final (the streaming emission contract). One sort-shuffle
     on user_id for the sessionize window; the joins then key on
     (user_id, session_id)."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_followed_by_any_sessionized(
-        ev, CEP_FBA_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_followed_by_any(ev, CEP_FBA_PATTERN,
+                                           key=CEP_SESSION_KEY)
 
 
 # Flink's oneOrMore().until(stop): collect clicks after a signup UNTIL
@@ -768,18 +758,16 @@ def q_cep_until(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_until_sessionized",
-       oracle=match_recognize_until_sessionized_oracle_sql(
-           CEP_UNTIL_PATTERN, gap_minutes=720))
+       oracle=match_recognize_until_oracle_sql(
+           CEP_UNTIL_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY))
 def q_cep_until_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized until-matching — the state-bound deployment shape:
     12-hour sessions per user, then the until pattern within each
     session (partial-match state cannot span a key's history). Same
     one sort-shuffle sessionize front as the other sessionized CEP
     keys; match keys are (user_id, session_id)."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_until_sessionized(
-        ev, CEP_UNTIL_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_until(ev, CEP_UNTIL_PATTERN, key=CEP_SESSION_KEY)
 
 
 # Flink's timesOrMore(m): at least m occurrences, unbounded above —
@@ -935,8 +923,8 @@ def q_cep_followed_by_group_bounded(spark: SparkSession,
 
 
 @query("q_cep_followed_by_group_sessionized",
-       oracle=match_recognize_relaxed_groups_sessionized_oracle_sql(
-           CEP_RG_PATTERN, gap_minutes=720))
+       oracle=match_recognize_relaxed_groups_oracle_sql(
+           CEP_RG_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY))
 def q_cep_followed_by_group_sessionized(spark: SparkSession,
                                         sf_dir: str) -> DataFrame:
     """Sessionized relaxed grouped matching — the deployment shape:
@@ -944,10 +932,9 @@ def q_cep_followed_by_group_sessionized(spark: SparkSession,
     loop's regex recursion depth (one JVM frame per iteration — the
     one relaxed lowering that is NOT flat char stars, so the session
     bound matters twice here)."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_relaxed_groups_sessionized(
-        ev, CEP_RG_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_relaxed_groups(ev, CEP_RG_PATTERN,
+                                          key=CEP_SESSION_KEY)
 
 
 # The classic MATCH_RECOGNIZE V-shape: any starting row, a nonempty
@@ -1030,8 +1017,9 @@ def q_cep_skip_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_cep_prev_sessionized",
-    oracle=match_recognize_define_sessionized_oracle_sql(
-        CEP_V_PATTERN, gap_minutes=720, skip="to_last:UP"
+    oracle=match_recognize_define_oracle_sql(
+        CEP_V_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY,
+        skip="to_last:UP"
     ),
 )
 def q_cep_prev_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1044,9 +1032,9 @@ def q_cep_prev_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     session length, the property that makes the whole family viable on
     unbounded keys at 100 TB. One sort-shuffle on user_id shared by
     sessionize, lag/lead, and tokenization."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_define_sessionized(
-        ev, CEP_V_PATTERN, gap_minutes=720, skip="to_last:UP"
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_define(
+        ev, CEP_V_PATTERN, key=CEP_SESSION_KEY, skip="to_last:UP"
     )
 
 
@@ -1648,8 +1636,9 @@ def q_cep_runagg_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_runagg_chain_sessionized",
-       oracle=match_recognize_runagg_sessionized_oracle_sql(
-           CEP_RUNAGG_CHAIN_PATTERN, gap_minutes=720))
+       oracle=match_recognize_runagg_oracle_sql(
+           CEP_RUNAGG_CHAIN_PATTERN, table=CEP_SESSIONS_SQL,
+           key=CEP_SESSION_KEY))
 def q_cep_runagg_chain_sessionized(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1660,10 +1649,9 @@ def q_cep_runagg_chain_sessionized(
     scan — by session length, the same envelope closure as every
     runagg deployment shape; the '?' in the chain exercises the
     tabulation engine over composite keys."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_runagg_sessionized(
-        ev, CEP_RUNAGG_CHAIN_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_runagg(ev, CEP_RUNAGG_CHAIN_PATTERN,
+                                  key=CEP_SESSION_KEY)
 
 
 # '+' on a NON-final suffix variable: the click run's extent must
@@ -1725,8 +1713,8 @@ def q_cep_runagg_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_runagg_sessionized",
-       oracle=match_recognize_runagg_sessionized_oracle_sql(
-           CEP_RUNAGG_PATTERN, gap_minutes=720))
+       oracle=match_recognize_runagg_oracle_sql(
+           CEP_RUNAGG_PATTERN, table=CEP_SESSIONS_SQL, key=CEP_SESSION_KEY))
 def q_cep_runagg_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The sessionized deployment shape for running-aggregate DEFINEs
     (VERDICT r6 next-step #3): 12-hour-gap sessions per user, then
@@ -1737,10 +1725,8 @@ def q_cep_runagg_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     same way q_cep_prev_sessionized closes it for PREV navigation.
     One sort-shuffle on user_id shared by sessionize, the prefix-sum
     window, and the per-(user, session) collect."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_runagg_sessionized(
-        ev, CEP_RUNAGG_PATTERN, gap_minutes=720
-    )
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_runagg(ev, CEP_RUNAGG_PATTERN, key=CEP_SESSION_KEY)
 
 
 # Iterative condition (round 11 — VERDICT r10 next-step #5): the loop
@@ -1812,17 +1798,18 @@ def q_cep_iterative_within(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_iterative_sessionized",
-       oracle=match_recognize_iterative_sessionized_oracle_sql(
-           CEP_ITER_ANCHOR, CEP_ITER_LOOP, gap_minutes=720))
+       oracle=match_recognize_iterative_oracle_sql(
+           CEP_ITER_ANCHOR, CEP_ITER_LOOP, table=CEP_SESSIONS_SQL,
+           key=CEP_SESSION_KEY))
 def q_cep_iterative_sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized deployment shape for iterative conditions: 12-hour
     sessions per user, then PATTERN (A B+) DEFINE B AS B.value <
     A.value * 1.1 within each (user, session) — bounds the per-anchor
     scan by session length, the same envelope closure as
     q_cep_runagg_sessionized / q_cep_prev_sessionized."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_iterative_sessionized(
-        ev, CEP_ITER_ANCHOR, CEP_ITER_LOOP, gap_minutes=720
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_iterative(
+        ev, CEP_ITER_ANCHOR, CEP_ITER_LOOP, key=CEP_SESSION_KEY
     )
 
 
@@ -1966,8 +1953,9 @@ def q_cep_followed_by_readmit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("q_cep_followed_by_iterative_sessionized",
-       oracle=match_recognize_followed_by_iterative_sessionized_oracle_sql(
-           CEP_ITER_ANCHOR, CEP_ITER_LOOP, gap_minutes=720))
+       oracle=match_recognize_followed_by_iterative_oracle_sql(
+           CEP_ITER_ANCHOR, CEP_ITER_LOOP, table=CEP_SESSIONS_SQL,
+           key=CEP_SESSION_KEY))
 def q_cep_followed_by_iterative_sessionized(
         spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionized deployment shape for the relaxed iterative loop:
@@ -1975,9 +1963,9 @@ def q_cep_followed_by_iterative_sessionized(
     greedy loop extent — the envelope closure every CEP family ships
     (q_cep_iterative_sessionized precedent). Output adds
     session_id."""
-    ev = load(spark, sf_dir, "events")
-    return match_recognize_followed_by_iterative_sessionized(
-        ev, CEP_ITER_ANCHOR, CEP_ITER_LOOP, gap_minutes=720)
+    ev = sessionize(load(spark, sf_dir, "events"), CEP_GAP)
+    return match_recognize_followed_by_iterative(
+        ev, CEP_ITER_ANCHOR, CEP_ITER_LOOP, key=CEP_SESSION_KEY)
 
 
 # Reluctant quantifier where greedy and lazy genuinely diverge: the

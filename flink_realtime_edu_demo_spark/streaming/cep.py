@@ -10,7 +10,8 @@ overwrite — a replayed batch rewrites the same bytes); the watermark is
 max-seen event time minus the session gap; sessions whose last event is
 older than the watermark are closed — no future row can fall inside
 their gap window — so their matches are final and are recomputed with
-the BATCH match_recognize_sessionized and published atomically.
+the BATCH composition, ``sessionize(events, gap)`` plus the flat engine
+keyed by ``[key, "session_id"]``, and published atomically.
 Matches of still-open sessions are withheld, so every published row is
 immutable (append-only downstream, no retract needed — the reason to
 emit on session close rather than per match).
@@ -37,6 +38,7 @@ path with only a per-batch row count reaching the driver.
 
 from __future__ import annotations
 
+import inspect
 import os
 import tempfile
 
@@ -44,19 +46,33 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.cep import (
-    match_recognize_consecutive_sessionized,
-    match_recognize_relaxed_groups_sessionized,
-    match_recognize_define_sessionized,
-    match_recognize_followed_by_any_sessionized,
-    match_recognize_followed_by_iterative_sessionized,
-    match_recognize_iterative_sessionized,
-    match_recognize_relaxed_sessionized,
-    match_recognize_runagg_sessionized,
-    match_recognize_sessionized,
-    match_recognize_until_sessionized,
+    match_recognize,
+    match_recognize_consecutive,
+    match_recognize_define,
+    match_recognize_followed_by_any,
+    match_recognize_followed_by_iterative,
+    match_recognize_iterative,
+    match_recognize_relaxed,
+    match_recognize_relaxed_groups,
+    match_recognize_runagg,
+    match_recognize_until,
     sessionize,
 )
 from .sinks import idempotent_foreach_batch
+
+# matcher name -> the flat engine the sink runs per (key, session)
+_ENGINES = {
+    "types": match_recognize,
+    "define": match_recognize_define,
+    "runagg": match_recognize_runagg,
+    "relaxed": match_recognize_relaxed,
+    "fba": match_recognize_followed_by_any,
+    "until": match_recognize_until,
+    "consecutive": match_recognize_consecutive,
+    "relaxed_groups": match_recognize_relaxed_groups,
+    "iterative": match_recognize_iterative,
+    "followed_by_iterative": match_recognize_followed_by_iterative,
+}
 
 
 class SessionCepSink:
@@ -71,9 +87,13 @@ class SessionCepSink:
     (key, session_id, match_no); once present an entry never changes
     (tested). ``observe=False`` keeps every row distributed.
 
+    Every matcher runs its flat engine on the sessionized history with
+    ``key=[key, "session_id"]``; ``skip`` and ``within_minutes`` are
+    forwarded to every engine that takes them (and rejected at
+    construction for one that does not).
     ``matcher='types'`` (default) runs the event-type pattern engine;
-    ``matcher='define'`` runs the PREV/NEXT DEFINE engine with the
-    given ``skip`` policy; ``matcher='runagg'`` runs the
+    ``matcher='define'`` runs the PREV/NEXT DEFINE engine;
+    ``matcher='runagg'`` runs the
     running-aggregate DEFINE engine (round 7 — the sessionized form,
     so the per-key O(rows²) scan is bounded by session length even in
     the stream); ``matcher='fba'`` runs followedByAny combination
@@ -102,9 +122,7 @@ class SessionCepSink:
                  within_minutes: int | None = None,
                  consecutive=None,
                  observe: bool = True):
-        if matcher not in ("types", "define", "runagg", "relaxed", "fba",
-                           "until", "consecutive", "relaxed_groups",
-                           "iterative", "followed_by_iterative"):
+        if matcher not in _ENGINES:
             raise ValueError("matcher must be 'types', 'define', "
                              "'runagg', 'relaxed', 'fba', 'until', "
                              "'consecutive', 'relaxed_groups', "
@@ -123,11 +141,23 @@ class SessionCepSink:
             # mid-stream inside _validate_consecutive (ADVICE r10)
             raise ValueError("matcher='consecutive' needs a non-empty "
                              "'consecutive' loop-variable set")
+        opts = {}
+        if skip != "past_last_row":
+            opts["skip"] = skip
+        if within_minutes is not None:
+            opts["within_minutes"] = within_minutes
+        params = inspect.signature(_ENGINES[matcher]).parameters
+        unsupported = [k for k in opts if k not in params]
+        if unsupported:
+            # eager: silently dropping the option would change the
+            # match semantics between the stream and a batch run
+            raise ValueError(f"matcher={matcher!r} takes no "
+                             f"{' or '.join(unsupported)}")
+        self._opts = opts
         self.pattern = pattern
         self.gap_minutes = gap_minutes
         self.key, self.ts, self.id_col = key, ts, id_col
-        self.matcher, self.skip = matcher, skip
-        self.within_minutes = within_minutes
+        self.matcher = matcher
         self.consecutive = consecutive
         base = store_dir or tempfile.mkdtemp(prefix="session_cep_")
         self.staging_dir = f"{base}/staging"
@@ -196,82 +226,23 @@ class SessionCepSink:
         closed = bounds.filter(
             F.col("__last_ts") + gap <= F.lit(self._max_ts)
         ).select(self.key, "session_id")
-        if self.matcher == "define":
-            matched = match_recognize_define_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-                skip=self.skip,
-            )
-        elif self.matcher == "runagg":
-            matched = match_recognize_runagg_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-                skip=self.skip,
-            )
-        elif self.matcher == "relaxed":
-            # round 9: Flink followedBy under the same session-close
-            # emission contract — the deployment shape that bounds
-            # skip-till-next state by session length
-            matched = match_recognize_relaxed_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-            )
-        elif self.matcher == "until":
-            # round 10: oneOrMore().until(stop) on session close — the
-            # stop condition already bounds loop state; the session
-            # bound caps the waiting gaps too
-            matched = match_recognize_until_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-            )
+        if self.matcher in ("iterative", "followed_by_iterative"):
+            args = tuple(self.pattern)  # (anchor_def, loop_def)
         elif self.matcher == "consecutive":
-            # round 10: times/oneOrMore .consecutive() on session close
-            matched = match_recognize_consecutive_sessionized(
-                hist, self.pattern, self.consecutive, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-            )
-        elif self.matcher == "relaxed_groups":
-            # round 10: GroupPattern under followedBy on session close
-            # (the session bound also caps the group loop's regex
-            # recursion depth)
-            matched = match_recognize_relaxed_groups_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-            )
-        elif self.matcher == "iterative":
-            # round 11: anchor-referencing IterativeCondition on
-            # session close — the session bound is what bounds the
-            # per-anchor scan in the stream, same story as runagg
-            matched = match_recognize_iterative_sessionized(
-                hist, self.pattern[0], self.pattern[1], self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-                skip=self.skip,
-            )
-        elif self.matcher == "followed_by_iterative":
-            # round 12: IterativeCondition under RELAXED linking on
-            # session close — the session bound caps the per-anchor
-            # scan AND the greedy loop extent (without it the greedy
-            # end would keep moving while a session stays open; on a
-            # CLOSED session it is final, which is what makes the
-            # published rows immutable)
-            matched = match_recognize_followed_by_iterative_sessionized(
-                hist, self.pattern[0], self.pattern[1], self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-                skip=self.skip, within_minutes=self.within_minutes,
-            )
-        elif self.matcher == "fba":
-            # round 9: followedByAny (combination enumeration) on
-            # session close. Combinations carry no inherent match_no;
+            args = (self.pattern, self.consecutive)
+        else:
+            args = (self.pattern,)
+        matched = _ENGINES[self.matcher](
+            sess, *args, key=[self.key, "session_id"], ts=self.ts,
+            id_col=self.id_col, **self._opts,
+        )
+        if self.matcher == "fba":
+            # followedByAny combinations carry no inherent match_no;
             # synthesize one as a row_number over the variable-id
             # tuple — deterministic, and STABLE because a closed
             # session never gains rows (only closed sessions publish).
             from pyspark.sql.window import Window
 
-            matched = match_recognize_followed_by_any_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                within_minutes=self.within_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
-            )
             id_cols = [f"{var.lower()}_event_id"
                        for var, _, _ in self.pattern]
             matched = matched.withColumn(
@@ -279,11 +250,6 @@ class SessionCepSink:
                 F.row_number().over(
                     Window.partitionBy(self.key, "session_id")
                     .orderBy(*id_cols)).cast("long"),
-            )
-        else:
-            matched = match_recognize_sessionized(
-                hist, self.pattern, self.gap_minutes,
-                key=self.key, ts=self.ts, id_col=self.id_col,
             )
         matches = matched.join(closed, [self.key, "session_id"])
         # 5. publish (deployment path): anti-join against the durable

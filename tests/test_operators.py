@@ -271,7 +271,8 @@ def test_match_recognize_sessionized_gap_boundary(spark, sf_dir):
     import datetime as dt
 
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_sessionized,
+        match_recognize,
+        sessionize,
     )
 
     t0 = dt.datetime(2024, 1, 1)
@@ -289,9 +290,49 @@ def test_match_recognize_sessionized_gap_boundary(spark, sf_dir):
         rows, "user_id long, event_id long, ts timestamp_ntz, event_type string"
     )
     pat = [("A", "view", "1"), ("B", "click", "+"), ("C", "purchase", "1")]
-    out = match_recognize_sessionized(evdf, pat, gap_minutes=30).collect()
+    out = match_recognize(sessionize(evdf, 30), pat,
+                          key=["user_id", "session_id"]).collect()
     assert [(r.user_id, r.session_id, r.first_event_id, r.last_event_id)
             for r in out] == [(1, 0, 1, 3)]
+
+
+def test_sessionize_oracle_agrees_on_gap_boundary(spark):
+    """The one session definition both sides share: a gap of exactly
+    ``gap`` stays in the session, ``gap`` + 1 s starts a new one —
+    :func:`sessionize` and :func:`sessionize_oracle_sql` assign the
+    same session_id on those boundary rows (ties on ts break by id)."""
+    import datetime as dt
+
+    import duckdb
+
+    from flink_realtime_edu_demo_spark.operators.cep import (
+        sessionize,
+        sessionize_oracle_sql,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    gap = dt.timedelta(minutes=30)
+    rows = [
+        (1, 1, t0), (1, 2, t0 + gap),                     # == gap: same
+        (1, 3, t0 + 2 * gap + dt.timedelta(seconds=1)),   # > gap: new
+        (1, 4, t0 + 2 * gap + dt.timedelta(seconds=1)),   # tie on ts
+        (2, 5, t0 + gap + dt.timedelta(seconds=1)),
+        (2, 6, t0),                                       # out of order
+    ]
+    schema = "user_id long, event_id long, ts timestamp_ntz"
+    spark_ids = {
+        r.event_id: r.session_id
+        for r in sessionize(spark.createDataFrame(rows, schema), 30)
+        .collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE ev (user_id BIGINT, event_id BIGINT, "
+                "ts TIMESTAMP)")
+    con.executemany("INSERT INTO ev VALUES (?, ?, ?)", rows)
+    oracle_ids = dict(con.sql(
+        f"SELECT event_id, session_id FROM {sessionize_oracle_sql('ev', 30)}"
+    ).fetchall())
+    assert spark_ids == oracle_ids == {1: 0, 2: 0, 3: 1, 4: 1, 5: 1, 6: 0}
 
 
 def test_runagg_sessionized_gap_boundary(spark, sf_dir):
@@ -302,7 +343,8 @@ def test_runagg_sessionized_gap_boundary(spark, sf_dir):
     import datetime as dt
 
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_runagg_sessionized,
+        match_recognize_runagg,
+        sessionize,
     )
 
     t0 = dt.datetime(2024, 1, 1)
@@ -327,7 +369,8 @@ def test_runagg_sessionized_gap_boundary(spark, sf_dir):
     )
     pat = [("A", {"types": "view"}, "1"),
            ("B", {"agg": "sum", "cmp": "<", "thr": 100.0}, "+")]
-    out = match_recognize_runagg_sessionized(evdf, pat, gap_minutes=30)
+    out = match_recognize_runagg(sessionize(evdf, 30), pat,
+                                 key=["user_id", "session_id"])
     got = sorted(
         (r.user_id, r.session_id, r.first_event_id, r.last_event_id,
          r.b_rows, r.b_sum)

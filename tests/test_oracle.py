@@ -66,24 +66,101 @@ def test_all_rows_running_over_define_engine(spark, sf_dir, con):
 
 
 def test_iterative_sessionized_composes_suffix_and_within(spark, sf_dir, con):
-    """The sessionized iterative wrapper threads suffix_def /
-    within_minutes to the flat engine (ADVICE r11: the documented
-    deployment shape previously could not compose with the PATTERN
-    (A B+ C) and .within() features) — full differential parity with
-    the composed oracle on the events fixture."""
+    """The sessionized iterative composition (sessionize, then the flat
+    engine per (user, session)) composes with suffix_def (PATTERN
+    (A B+ C)) and within_minutes — full differential parity with the
+    composed oracle on the events fixture."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_iterative_sessionized,
-        match_recognize_iterative_sessionized_oracle_sql,
+        match_recognize_iterative,
+        match_recognize_iterative_oracle_sql,
+        sessionize,
+        sessionize_oracle_sql,
     )
     from flink_realtime_edu_demo_spark.tables import load
 
     anchor = {"types": "view"}
     loop = {"cmp": "<", "factor": 1.1}
-    kw = dict(gap_minutes=720, suffix_def={"types": "purchase"},
-              within_minutes=1440)
-    ev = load(spark, sf_dir, "events")
-    df = match_recognize_iterative_sessionized(ev, anchor, loop, **kw)
-    sql = match_recognize_iterative_sessionized_oracle_sql(anchor, loop, **kw)
+    kw = dict(key=["user_id", "session_id"],
+              suffix_def={"types": "purchase"}, within_minutes=1440)
+    ev = sessionize(load(spark, sf_dir, "events"), 720)
+    df = match_recognize_iterative(ev, anchor, loop, **kw)
+    sql = match_recognize_iterative_oracle_sql(
+        anchor, loop, table=sessionize_oracle_sql("events", 720), **kw)
     tiny = sf_dir.rstrip("/").endswith("sf0.001")
     compare(df, con, sql, "iterative_sessionized+suffix+within",
             allow_empty=tiny)
+
+
+def _composite_key_cases():
+    from flink_realtime_edu_demo_spark.operators import cep
+    from flink_realtime_edu_demo_spark.queries import streaming_batch as sb
+
+    return {
+        "all_rows": lambda **kw: cep.match_recognize_all_rows_oracle_sql(
+            sb.CEP_PATTERN, **kw),
+        "all_rows_unmatched":
+            lambda **kw: cep.match_recognize_all_rows_unmatched_oracle_sql(
+                sb.CEP_ALT_PATTERN, **kw),
+        "all_rows_running":
+            lambda **kw: cep.match_recognize_all_rows_running_oracle_sql(
+                sb.CEP_PATTERN, subsets=sb.CEP_SUBSETS, **kw),
+        "permute": lambda **kw: cep.match_recognize_permute_oracle_sql(
+            sb.CEP_PERMUTE, suffix=sb.CEP_PERMUTE_SUFFIX, **kw),
+        "define_all_rows":
+            lambda **kw: cep.match_recognize_define_all_rows_oracle_sql(
+                sb.CEP_V_PATTERN, **kw),
+        "relaxed_not": lambda **kw: cep.match_recognize_relaxed_not_oracle_sql(
+            sb.CEP_FB_NOT_PATTERN, **kw),
+        "relaxed_all_rows":
+            lambda **kw: cep.match_recognize_relaxed_all_rows_oracle_sql(
+                sb.CEP_FB_PATTERN, **kw),
+        "relaxed_define":
+            lambda **kw: cep.match_recognize_relaxed_define_oracle_sql(
+                sb.CEP_FB_DEFINE_PATTERN, **kw),
+        "consecutive": lambda **kw: cep.match_recognize_consecutive_oracle_sql(
+            sb.CEP_CONSEC_PATTERN, ("C",), **kw),
+        "times_combinations":
+            lambda **kw: cep.match_recognize_times_combinations_oracle_sql(
+                sb.CEP_COMBINATIONS_CHAIN_PATTERN, within_minutes=1440, **kw),
+        "not_followed_by_end":
+            lambda **kw: cep.match_recognize_not_followed_by_end_oracle_sql(
+                [("V", "view", "1")], "purchase", within_minutes=60, **kw),
+        "not_followed_by_interior":
+            lambda **kw:
+            cep.match_recognize_not_followed_by_interior_oracle_sql(
+                sb.CEP_NFB_INTERIOR_PATTERN, sb.CEP_NFB_INTERIOR_EDGES,
+                within_minutes=1440, **kw),
+        "within_step": lambda **kw: cep.match_recognize_within_step_oracle_sql(
+            sb.CEP_STEP_PATTERN, within_minutes=360, links={"C"}, **kw),
+        "not_next_end": lambda **kw: cep.match_recognize_not_next_end_oracle_sql(
+            sb.CEP_NOTNEXT_PATTERN, "error", **kw),
+        "not_next_end_quantified":
+            lambda **kw: cep.match_recognize_not_next_end_oracle_sql(
+                sb.CEP_NOTNEXT_QUANT_PATTERN, "error", **kw),
+        "not_next": lambda **kw: cep.match_recognize_not_next_oracle_sql(
+            sb.CEP_NOTNEXT_INTERIOR_PATTERN, {"V": ("error",)}, **kw),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_composite_key_cases()))
+def test_oracle_builder_takes_composite_key(name, con):
+    """Every oracle builder takes ``key`` as a list, as the engines do:
+    partitioning by (part, user_id) with part = user_id % 2 is the same
+    partition as user_id alone, so the rows must agree once ``part`` is
+    dropped — and a join or window that used only the FIRST key column
+    (part) would mix users and disagree."""
+    build = _composite_key_cases()[name]
+    split = "(SELECT *, user_id % 2 AS part FROM events)"
+
+    def rows(sql, drop=()):
+        rel = con.sql(sql)
+        keep = [i for i, c in enumerate(rel.columns) if c not in drop]
+        cols = [rel.columns[i] for i in keep]
+        return sorted(
+            tuple(sorted(zip(cols, (repr(r[i]) for i in keep))))
+            for r in rel.fetchall())
+
+    flat = rows(build())
+    composite = rows(build(table=split, key=["part", "user_id"]),
+                     drop=("part",))
+    assert composite == flat and flat

@@ -22,6 +22,10 @@ import pytest
 from flink_realtime_edu_demo_spark.operators import cep
 from flink_realtime_edu_demo_spark.operators.pattern_api import Pattern
 from flink_realtime_edu_demo_spark.tables import load
+from flink_realtime_edu_demo_spark.testing.compare import (
+    compare,
+    duckdb_connect,
+)
 
 # The declared-key pattern constants the twins replicate.
 from flink_realtime_edu_demo_spark.queries.streaming_batch import (
@@ -60,6 +64,15 @@ def _hash(df) -> str:
 # Twin builders: (id, fluent pattern, expected engine name,
 #                 hand-written df fn, hand-written oracle sql | None)
 # ---------------------------------------------------------------------
+
+# sessionized(720) twins: sessionize, then the engine per (user, session)
+S_KEY = ["user_id", "session_id"]
+S_EVENTS = cep.sessionize_oracle_sql("events", 720)
+
+
+def _sess(ev):
+    return cep.sessionize(ev, 720)
+
 
 TWINS = [
     (
@@ -113,13 +126,13 @@ TWINS = [
                 .one_or_more().optional().consecutive()
                 .next("P").where(types="purchase")
                 .sessionized(gap_minutes=720),
-        "match_recognize_sessionized",
-        lambda ev: cep.match_recognize_sessionized(
-            ev, [("V", "view", "1"), ("CE", ("click", "error"), "*"),
-                 ("P", "purchase", "1")], gap_minutes=720),
-        lambda: cep.match_recognize_sessionized_oracle_sql(
+        "match_recognize",
+        lambda ev: cep.match_recognize(
+            _sess(ev), [("V", "view", "1"), ("CE", ("click", "error"), "*"),
+                        ("P", "purchase", "1")], key=S_KEY),
+        lambda: cep.match_recognize_oracle_sql(
             [("V", "view", "1"), ("CE", ("click", "error"), "*"),
-             ("P", "purchase", "1")], gap_minutes=720),
+             ("P", "purchase", "1")], table=S_EVENTS, key=S_KEY),
     ),
     (
         "followed_by",
@@ -173,11 +186,11 @@ TWINS = [
                 .followed_by("C").where(types="click").one_or_more()
                 .followed_by("P").where(types="purchase")
                 .sessionized(gap_minutes=720),
-        "match_recognize_relaxed_sessionized",
-        lambda ev: cep.match_recognize_relaxed_sessionized(
-            ev, CEP_FB_PATTERN, gap_minutes=720),
-        lambda: cep.match_recognize_relaxed_sessionized_oracle_sql(
-            CEP_FB_PATTERN, gap_minutes=720),
+        "match_recognize_relaxed",
+        lambda ev: cep.match_recognize_relaxed(
+            _sess(ev), CEP_FB_PATTERN, key=S_KEY),
+        lambda: cep.match_recognize_relaxed_oracle_sql(
+            CEP_FB_PATTERN, table=S_EVENTS, key=S_KEY),
     ),
     (
         "skip_to_last",
@@ -499,17 +512,136 @@ TWINS = [
                                          ("P", "purchase")])
                 .one_or_more()
                 .sessionized(gap_minutes=720),
-        "match_recognize_relaxed_groups_sessionized",
-        lambda ev: cep.match_recognize_relaxed_groups_sessionized(
-            ev, [("S", "signup", "1"),
-                 ("G", [("C", "click", "1"),
-                        ("P", "purchase", "1")], "+")],
-            gap_minutes=720),
-        lambda: cep.match_recognize_relaxed_groups_sessionized_oracle_sql(
+        "match_recognize_relaxed_groups",
+        lambda ev: cep.match_recognize_relaxed_groups(
+            _sess(ev), [("S", "signup", "1"),
+                        ("G", [("C", "click", "1"),
+                               ("P", "purchase", "1")], "+")],
+            key=S_KEY),
+        lambda: cep.match_recognize_relaxed_groups_oracle_sql(
             [("S", "signup", "1"),
              ("G", [("C", "click", "1"),
                     ("P", "purchase", "1")], "+")],
-            gap_minutes=720),
+            table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "strict_within_sessionized",
+        lambda: Pattern.begin("V").where(types="view")
+                .next("CE").where(types=("click", "error"))
+                .one_or_more().consecutive()
+                .next("P").where(types="purchase")
+                .within(hours=12).sessionized(gap_minutes=720),
+        "match_recognize_within",
+        lambda ev: cep.match_recognize_within(
+            _sess(ev), CEP_ALT_PATTERN, within_minutes=720, key=S_KEY),
+        lambda: cep.match_recognize_within_oracle_sql(
+            CEP_ALT_PATTERN, within_minutes=720, table=S_EVENTS,
+            key=S_KEY),
+    ),
+    (
+        "within_plus_sessionized",
+        lambda: Pattern.begin("V").where(types="view")
+                .followed_by("P").where(types="purchase")
+                .within(hours=1).sessionized(gap_minutes=720),
+        "match_recognize_relaxed_within",
+        lambda ev: cep.match_recognize_relaxed_within(
+            _sess(ev), [("V", "view", "1"), ("P", "purchase", "1")],
+            within_minutes=60, key=S_KEY),
+        lambda: cep.match_recognize_relaxed_within_oracle_sql(
+            [("V", "view", "1"), ("P", "purchase", "1")],
+            within_minutes=60, table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "define_within_sessionized",
+        lambda: Pattern.begin("A").where(types="view")
+                .next("D").where(cond={"dir": "down"}).one_or_more()
+                .within(hours=12).sessionized(gap_minutes=720),
+        "match_recognize_define_within",
+        lambda ev: cep.match_recognize_define_within(
+            _sess(ev), [("A", {"types": "view"}, "1"),
+                        ("D", {"dir": "down"}, "+")],
+            within_minutes=720, key=S_KEY),
+        lambda: cep.match_recognize_define_within_oracle_sql(
+            [("A", {"types": "view"}, "1"), ("D", {"dir": "down"}, "+")],
+            within_minutes=720, table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "define_skip_sessionized",
+        lambda: Pattern.begin("A", skip="to_next_row").where(types="view")
+                .next("D").where(cond={"dir": "down"}).one_or_more()
+                .sessionized(gap_minutes=720),
+        "match_recognize_define",
+        lambda ev: cep.match_recognize_define(
+            _sess(ev), [("A", {"types": "view"}, "1"),
+                        ("D", {"dir": "down"}, "+")],
+            skip="to_next_row", key=S_KEY),
+        lambda: cep.match_recognize_define_oracle_sql(
+            [("A", {"types": "view"}, "1"), ("D", {"dir": "down"}, "+")],
+            skip="to_next_row", table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "strict_skip_sessionized",
+        lambda: Pattern.begin("C", skip="to_next_row").where(types="click")
+                .next("P").where(types="purchase")
+                .sessionized(gap_minutes=720),
+        "match_recognize_define",
+        lambda ev: cep.match_recognize_define(
+            _sess(ev), [("C", {"types": "click"}, "1"),
+                        ("P", {"types": "purchase"}, "1")],
+            skip="to_next_row", key=S_KEY),
+        lambda: cep.match_recognize_define_oracle_sql(
+            [("C", {"types": "click"}, "1"),
+             ("P", {"types": "purchase"}, "1")],
+            skip="to_next_row", table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "runagg_skip_sessionized",
+        lambda: Pattern.begin("A", skip="to_next_row").where(types="view")
+                .next("B").where(cond={"agg": "sum", "cmp": "<",
+                                       "thr": 150.0}).one_or_more()
+                .sessionized(gap_minutes=720),
+        "match_recognize_runagg",
+        lambda ev: cep.match_recognize_runagg(
+            _sess(ev), [("A", {"types": "view"}, "1"),
+                        ("B", {"agg": "sum", "cmp": "<", "thr": 150.0},
+                         "+")],
+            skip="to_next_row", key=S_KEY),
+        lambda: cep.match_recognize_runagg_oracle_sql(
+            [("A", {"types": "view"}, "1"),
+             ("B", {"agg": "sum", "cmp": "<", "thr": 150.0}, "+")],
+            skip="to_next_row", table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "until_define_sessionized",
+        lambda: Pattern.begin("A").where(types="view")
+                .followed_by("B").where(types="click").one_or_more()
+                .until(cond={"dir": "down"})
+                .followed_by("P").where(types="purchase")
+                .sessionized(gap_minutes=720),
+        "match_recognize_until_define",
+        lambda ev: cep.match_recognize_until_define(
+            _sess(ev), CEP_UNTIL_DEFINE_PATTERN, key=S_KEY),
+        lambda: cep.match_recognize_until_define_oracle_sql(
+            CEP_UNTIL_DEFINE_PATTERN, table=S_EVENTS, key=S_KEY),
+    ),
+    (
+        "group_strict_sessionized",
+        lambda: Pattern.begin("V").where(types="view")
+                .next_group("G", [("CE", ("click", "error")),
+                                  ("P", "purchase")])
+                .one_or_more().consecutive()
+                .sessionized(gap_minutes=720),
+        "match_recognize_groups",
+        lambda ev: cep.match_recognize_groups(
+            _sess(ev), [("V", "view", "1"),
+                        ("G", [("CE", ("click", "error"), "1"),
+                               ("P", "purchase", "1")], "+")],
+            key=S_KEY),
+        lambda: cep.match_recognize_groups_oracle_sql(
+            [("V", "view", "1"),
+             ("G", [("CE", ("click", "error"), "1"),
+                    ("P", "purchase", "1")], "+")],
+            table=S_EVENTS, key=S_KEY),
     ),
     (
         "camel_case_aliases",
@@ -538,6 +670,10 @@ def test_builder_twin(spark, sf_dir, name, build, engine,
         f"{engine} call")
     assert _hash(got) == _hash(want)
     assert compiled.oracle_sql() == expected_oracle()
+    if compiled.gap_minutes is not None:
+        # a sessionized oracle is new SQL (no declared key runs it):
+        # replay it against the engine's rows
+        compare(got, duckdb_connect(sf_dir), compiled.oracle_sql(), name)
 
 
 def test_strict_skip_routes_to_define_engine(spark, sf_dir):
@@ -624,13 +760,6 @@ ERRORS = [
                 .followed_by("P").where(types="purchase")
                 .within(hours=6),
         "match_recognize_relaxed_within",
-    ),
-    (
-        "within_plus_sessionized",
-        lambda: Pattern.begin("V").where(types="view")
-                .followed_by("P").where(types="purchase")
-                .within(hours=1).sessionized(gap_minutes=720),
-        "sessionized",
     ),
     (
         "absence_with_cond",
@@ -792,17 +921,14 @@ def test_session_sink_mapping_matches_direct_construction(tmp_path):
             assert sink.consecutive == ("C",)
 
 
-def test_session_sink_stream_matches_batch(spark, sf_dir, tmp_path):
-    """A builder-deployed SessionCepSink drains a real micro-batched
-    stream to the same closed-session match set as the batch
-    sessionized engine — the builder drives the streaming path end to
-    end."""
+def _stream_and_batch(spark, sf_dir, tmp_path, pattern, batch_fn,
+                      gap=720):
+    """Drain a real micro-batched stream through ``pattern``'s
+    session_sink, then return (emitted, batch) match maps over the
+    closed sessions: ``batch_fn(events)`` computes the batch side on
+    the same rows the stream read."""
     from pyspark.sql import functions as F
 
-    from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_relaxed_sessionized,
-        sessionize,
-    )
     from flink_realtime_edu_demo_spark.sources.readers import (
         materialize_stream_input,
         stream_table,
@@ -814,12 +940,8 @@ def test_session_sink_stream_matches_batch(spark, sf_dir, tmp_path):
     stream_dir = str(tmp_path / "stream_in")
     materialize_stream_input(spark, sf_dir, "events", stream_dir,
                              n_splits=3)
-    gap = 720
-    sink = (Pattern.begin("V").where(types="view")
-            .followed_by("C").where(types="click").one_or_more()
-            .followed_by("P").where(types="purchase")
-            .session_sink(gap_minutes=gap,
-                          store_dir=str(tmp_path / "sink")))
+    sink = pattern.session_sink(gap_minutes=gap,
+                                store_dir=str(tmp_path / "sink"))
     q = start_session_cep(stream_table(spark, stream_dir, "events"),
                           str(tmp_path / "ckpt"), sink)
     q.processAllAvailable()
@@ -830,21 +952,47 @@ def test_session_sink_stream_matches_batch(spark, sf_dir, tmp_path):
         "event_type STRING, value DOUBLE, props STRING"
     ).parquet(f"{stream_dir}/events_stream")
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    sess = sessionize(ev, gap)
     closed = (
-        sess.groupBy("user_id", "session_id")
+        cep.sessionize(ev, gap).groupBy("user_id", "session_id")
         .agg(F.max("ts").alias("last_ts"))
         .filter(F.col("last_ts") + F.expr(f"INTERVAL {gap} MINUTES")
                 <= F.lit(max_ts))
         .select("user_id", "session_id")
     )
-    want = {
+    batch = {
         (r.user_id, r.session_id, r.match_no):
         (r.first_event_id, r.last_event_id)
-        for r in match_recognize_relaxed_sessionized(
-            ev, CEP_FB_PATTERN, gap)
-        .join(closed, ["user_id", "session_id"]).collect()
+        for r in batch_fn(ev).join(closed, ["user_id", "session_id"])
+        .collect()
     }
-    got = {k: (v["first_event_id"], v["last_event_id"])
-           for k, v in sink.emitted.items()}
+    emitted = {k: (v["first_event_id"], v["last_event_id"])
+               for k, v in sink.emitted.items()}
+    return emitted, batch
+
+
+def test_session_sink_stream_matches_batch(spark, sf_dir, tmp_path):
+    """A builder-deployed SessionCepSink drains a real micro-batched
+    stream to the same closed-session match set as the batch
+    composition (sessionize, then the relaxed engine per (user,
+    session)) — the builder drives the streaming path end to end."""
+    got, want = _stream_and_batch(
+        spark, sf_dir, tmp_path,
+        Pattern.begin("V").where(types="view")
+        .followed_by("C").where(types="click").one_or_more()
+        .followed_by("P").where(types="purchase"),
+        lambda ev: cep.match_recognize_relaxed(
+            cep.sessionize(ev, 720), CEP_FB_PATTERN,
+            key=["user_id", "session_id"]))
+    assert got == want and want
+
+
+def test_session_sink_keeps_skip_strategy(spark, sf_dir, tmp_path):
+    """The sink runs the pattern's AFTER MATCH SKIP strategy: a relaxed
+    pattern with skip='to_next_row' streams to the same closed-session
+    matches as ``.apply()`` on the same rows (past_last_row would find
+    fewer, non-overlapping matches)."""
+    p = (Pattern.begin("V", skip="to_next_row").where(types="view")
+         .followed_by("C").where(types="click").one_or_more()
+         .followed_by("P").where(types="purchase"))
+    got, want = _stream_and_batch(spark, sf_dir, tmp_path, p, p.apply)
     assert got == want and want

@@ -578,7 +578,7 @@ def test_streaming_cep_closed_sessions_match_batch(spark, sf_dir, stream_dir, tm
     sessionized answer restricted to closed sessions; emission is
     progressive (some matches publish before the last micro-batch)."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_sessionized,
+        match_recognize,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -608,7 +608,7 @@ def test_streaming_cep_closed_sessions_match_batch(spark, sf_dir, stream_dir, tm
     )
     want = {
         (r.user_id, r.session_id, r.match_no): (r.first_event_id, r.last_event_id, r.n_rows)
-        for r in match_recognize_sessionized(ev, pat, gap)
+        for r in match_recognize(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -652,7 +652,7 @@ def test_streaming_cep_runagg_matcher_matches_batch(spark, sf_dir, stream_dir, t
     session never gains rows, so the DECIMAL prefix sums and the
     left-to-right selection are final at publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_runagg_sessionized,
+        match_recognize_runagg,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -684,7 +684,7 @@ def test_streaming_cep_runagg_matcher_matches_batch(spark, sf_dir, stream_dir, t
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.b_rows, r.b_sum)
-        for r in match_recognize_runagg_sessionized(ev, pat, gap)
+        for r in match_recognize_runagg(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -700,7 +700,7 @@ def test_streaming_cep_distributed_publish_path(spark, sf_dir, stream_dir, tmp_p
     collected to the driver (only per-batch counts), and the results
     table still converges to the closed-session batch answer."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_sessionized,
+        match_recognize,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -732,7 +732,7 @@ def test_streaming_cep_distributed_publish_path(spark, sf_dir, stream_dir, tmp_p
     )
     want = {
         (r.user_id, r.session_id, r.match_no)
-        for r in match_recognize_sessionized(ev, pat, gap)
+        for r in match_recognize(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -749,7 +749,7 @@ def test_streaming_cep_define_matcher_matches_batch(spark, sf_dir, stream_dir, t
     closed session never gains rows, so session-confined PREV/NEXT and
     the skip-policy selection are final at publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_define_sessionized,
+        match_recognize_define,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -781,7 +781,8 @@ def test_streaming_cep_define_matcher_matches_batch(spark, sf_dir, stream_dir, t
     )
     want = {
         (r.user_id, r.session_id, r.match_no): (r.first_event_id, r.last_event_id, r.n_rows)
-        for r in match_recognize_define_sessionized(ev, pat, gap, skip="to_last:UP")
+        for r in match_recognize_define(sess, pat, key=["user_id", "session_id"],
+                                        skip="to_last:UP")
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1149,7 +1150,7 @@ def test_streaming_cep_relaxed_stream_equals_batch(spark, sf_dir, stream_dir, tm
     relaxed answer — valid incrementally because a closed session never
     gains rows, so skip-till-next state is final at publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_relaxed_sessionized,
+        match_recognize_relaxed,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1180,7 +1181,7 @@ def test_streaming_cep_relaxed_stream_equals_batch(spark, sf_dir, stream_dir, tm
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_rows, r.n_skipped)
-        for r in match_recognize_relaxed_sessionized(ev, pat, gap)
+        for r in match_recognize_relaxed(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1200,7 +1201,7 @@ def test_streaming_cep_fba_stream_equals_batch(spark, sf_dir, stream_dir, tmp_pa
     from pyspark.sql.window import Window
 
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_followed_by_any_sessionized,
+        match_recognize_followed_by_any,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1229,7 +1230,7 @@ def test_streaming_cep_fba_stream_equals_batch(spark, sf_dir, stream_dir, tmp_pa
         .select("user_id", "session_id")
     )
     batch = (
-        match_recognize_followed_by_any_sessionized(ev, pat, gap)
+        match_recognize_followed_by_any(sess, pat, key=["user_id", "session_id"])
         .withColumn(
             "match_no",
             F.row_number().over(
@@ -1257,7 +1258,7 @@ def test_streaming_cep_until_stream_equals_batch(spark, sf_dir, stream_dir,
     until answer — valid incrementally because a closed session never
     gains rows, so the loop's stop point is final at publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_until_sessionized,
+        match_recognize_until,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1290,7 +1291,7 @@ def test_streaming_cep_until_stream_equals_batch(spark, sf_dir, stream_dir,
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_rows, r.n_skipped)
-        for r in match_recognize_until_sessionized(ev, pat, gap)
+        for r in match_recognize_until(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1310,7 +1311,7 @@ def test_streaming_cep_iterative_stream_equals_batch(spark, sf_dir,
     closed session never gains rows, so each anchor's relative
     threshold and first-failure extent are final at publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_iterative_sessionized,
+        match_recognize_iterative,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1344,7 +1345,8 @@ def test_streaming_cep_iterative_stream_equals_batch(spark, sf_dir,
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_rows, r.b_rows)
-        for r in match_recognize_iterative_sessionized(ev, anchor, loop, gap)
+        for r in match_recognize_iterative(sess, anchor, loop,
+                                            key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1366,7 +1368,7 @@ def test_streaming_cep_followed_by_iterative_stream_equals_batch(
     which would keep moving while the session stays open) is final at
     publication."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_followed_by_iterative_sessionized,
+        match_recognize_followed_by_iterative,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1401,8 +1403,8 @@ def test_streaming_cep_followed_by_iterative_stream_equals_batch(
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_loop, r.n_skipped,
              r.last_loop_value)
-        for r in match_recognize_followed_by_iterative_sessionized(
-            ev, anchor, loop, gap)
+        for r in match_recognize_followed_by_iterative(
+            sess, anchor, loop, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1416,7 +1418,9 @@ def test_streaming_cep_followed_by_iterative_stream_equals_batch(
 
 def test_streaming_cep_iterative_needs_pair():
     """matcher='iterative' without an (anchor_def, loop_def) pair is a
-    CONSTRUCTOR-time error, like the other eager matcher checks."""
+    CONSTRUCTOR-time error, like the other eager matcher checks — and
+    so is a skip / within_minutes the matcher's engine cannot honour
+    (dropping it would make the stream disagree with batch)."""
     import pytest
 
     from flink_realtime_edu_demo_spark.streaming.cep import SessionCepSink
@@ -1424,6 +1428,12 @@ def test_streaming_cep_iterative_needs_pair():
     with pytest.raises(ValueError, match="anchor_def"):
         SessionCepSink([("A", "view", "1")], gap_minutes=720,
                        matcher="iterative")
+    with pytest.raises(ValueError, match="takes no skip"):
+        SessionCepSink([("A", "view", "1")], gap_minutes=720,
+                       skip="to_next_row")
+    with pytest.raises(ValueError, match="takes no within_minutes"):
+        SessionCepSink([("A", "view", "1")], gap_minutes=720,
+                       matcher="until", within_minutes=60)
 
 
 def test_streaming_cep_consecutive_stream_equals_batch(spark, sf_dir,
@@ -1432,7 +1442,7 @@ def test_streaming_cep_consecutive_stream_equals_batch(spark, sf_dir,
     matcher under the session-close emission contract converges to the
     batch sessionized consecutive answer."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_consecutive_sessionized,
+        match_recognize_consecutive,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1465,7 +1475,8 @@ def test_streaming_cep_consecutive_stream_equals_batch(spark, sf_dir,
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_rows, r.n_skipped)
-        for r in match_recognize_consecutive_sessionized(ev, pat, ("C",), gap)
+        for r in match_recognize_consecutive(sess, pat, ("C",),
+                                              key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }
@@ -1485,7 +1496,7 @@ def test_streaming_cep_relaxed_groups_stream_equals_batch(spark, sf_dir,
     converges to the batch sessionized answer (the session bound also
     caps the group loop's regex recursion depth)."""
     from flink_realtime_edu_demo_spark.operators.cep import (
-        match_recognize_relaxed_groups_sessionized,
+        match_recognize_relaxed_groups,
         sessionize,
     )
     from flink_realtime_edu_demo_spark.streaming.cep import (
@@ -1518,7 +1529,7 @@ def test_streaming_cep_relaxed_groups_stream_equals_batch(spark, sf_dir,
     want = {
         (r.user_id, r.session_id, r.match_no):
             (r.first_event_id, r.last_event_id, r.n_rows, r.n_tok_g)
-        for r in match_recognize_relaxed_groups_sessionized(ev, pat, gap)
+        for r in match_recognize_relaxed_groups(sess, pat, key=["user_id", "session_id"])
         .join(closed, ["user_id", "session_id"])
         .collect()
     }

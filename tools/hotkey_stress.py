@@ -12,8 +12,9 @@ the declared mitigation working:
 - `match_recognize_runagg` (unsessionized) collects the key's whole
   history into one array: per-anchor candidate arrays are O(N), so
   wall clock grows ~quadratically with N.
-- `match_recognize_runagg_sessionized` (gap 720 min) bounds every
-  array by burst length (200): wall clock grows ~linearly.
+- `sessionize(events, 720)` then `match_recognize_runagg` keyed by
+  `[user_id, session_id]` bounds every array by burst length (200):
+  wall clock grows ~linearly.
 
 The two forms are deliberately DIFFERENT queries on this stream: the
 flat form's B+ is row-contiguous, so an under-threshold run happily
@@ -47,6 +48,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+SESSION_KEY = ["user_id", "session_id"]
 
 BURST = 200          # events per burst (1/minute)
 PAUSE_MIN = 1500     # minutes between burst starts (> gap of 720)
@@ -104,7 +107,7 @@ def hot_events_fb(spark, n: int):
 def main() -> None:
     from flink_realtime_edu_demo_spark.operators.cep import (
         match_recognize_runagg,
-        match_recognize_runagg_sessionized,
+        sessionize,
     )
     from flink_realtime_edu_demo_spark.session import get_spark
 
@@ -125,7 +128,8 @@ def main() -> None:
     for n in (20_000, 100_000, 200_000):
         ev = hot_events(spark, n).localCheckpoint()
         t0 = time.perf_counter()
-        sess = match_recognize_runagg_sessionized(ev, PATTERN, GAP).collect()
+        sess = match_recognize_runagg(sessionize(ev, GAP), PATTERN,
+                                      key=SESSION_KEY).collect()
         dt = round(time.perf_counter() - t0, 2)
         out["sessionized"][str(n)] = {"sec": dt, "matches": len(sess)}
         print(f"  sessionized n={n}: {dt:>7.2f}s  {len(sess)} matches",
@@ -133,7 +137,6 @@ def main() -> None:
     # round 9: the relaxed (followedBy) engine on the same hot key
     from flink_realtime_edu_demo_spark.operators.cep import (
         match_recognize_relaxed,
-        match_recognize_relaxed_sessionized,
     )
 
     out["relaxed_flat"] = {}
@@ -149,7 +152,8 @@ def main() -> None:
     for n in (20_000, 100_000, 200_000):
         ev = hot_events_fb(spark, n).localCheckpoint()
         t0 = time.perf_counter()
-        m = match_recognize_relaxed_sessionized(ev, FB_PATTERN, GAP).collect()
+        m = match_recognize_relaxed(sessionize(ev, GAP), FB_PATTERN,
+                                    key=SESSION_KEY).collect()
         dt = round(time.perf_counter() - t0, 2)
         out["relaxed_sessionized"][str(n)] = {"sec": dt, "matches": len(m)}
         print(f"  relaxed_sess n={n}: {dt:>7.2f}s  {len(m)} matches",
@@ -263,7 +267,6 @@ def main() -> None:
     # burst length, the same two-curve story as the base runagg.
     from flink_realtime_edu_demo_spark.operators.cep import (
         match_recognize_iterative,
-        match_recognize_iterative_sessionized,
     )
 
     ITER_A = {"types": "view"}
@@ -281,8 +284,8 @@ def main() -> None:
     for n in (20_000, 100_000, 200_000):
         ev = hot_events(spark, n).localCheckpoint()
         t0 = time.perf_counter()
-        m = match_recognize_iterative_sessionized(
-            ev, ITER_A, ITER_B, gap_minutes=GAP
+        m = match_recognize_iterative(
+            sessionize(ev, GAP), ITER_A, ITER_B, key=SESSION_KEY
         ).collect()
         dt = round(time.perf_counter() - t0, 2)
         out["iterative_sessionized"][str(n)] = {"sec": dt,
@@ -370,8 +373,8 @@ def main() -> None:
         assert "anchored-scan gate" in str(e), str(e)[:500]
         gated["runagg_flat"] = "raised"
     # the deployment shape on the SAME oversized key sails through
-    m = match_recognize_iterative_sessionized(
-        ev, ITER_A, ITER_B, gap_minutes=GAP).collect()
+    m = match_recognize_iterative(
+        sessionize(ev, GAP), ITER_A, ITER_B, key=SESSION_KEY).collect()
     gated["iterative_sessionized"] = {"matches": len(m)}
     assert len(m) > 0
     out["anchor_scan_gate"] = gated

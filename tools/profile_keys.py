@@ -1,16 +1,19 @@
-"""Round-17 optimization profiler: per-key timing + formatted plans.
+"""Optimization profiler: per-key timing + formatted plans.
 
-Usage: python tools/profile_r17.py [--plans-only] [--tag before|after]
-                                   [--repeat N] [--sf DIR] KEY [KEY...]
+Usage: python tools/profile_keys.py --plans DIR --sf SF_DIR [--plans-only]
+                                    [--tag before|after] [--repeat N]
+                                    [KEY ...]
 
-For each key: writes plans/r16/<key>_<tag>.txt (explain formatted) and,
-unless --plans-only, times `collect()` (the bench methodology) REPEAT
-times and prints the median, plus a noop-sink timing (guide §1.4) so the
-computation is separable from the collect/driver transfer.
+For each key (default: every registered key): writes
+DIR/<key>_<tag>.txt (explain formatted) and, unless --plans-only, times
+`collect()` (the bench methodology) REPEAT times and prints the median,
+plus a noop-sink timing (guide §1.4) so the computation is separable
+from the collect/driver transfer.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import statistics
 import sys
@@ -24,34 +27,24 @@ from flink_realtime_edu_demo_spark.session import get_spark
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    sf = "/root/testdata/sf0.1"
-    tag = "before"
-    repeat = 3
-    plans_only = False
-    if "--plans-only" in args:
-        plans_only = True
-        args.remove("--plans-only")
-    for flag, setter in (("--sf", "sf"), ("--tag", "tag"), ("--repeat", "repeat")):
-        if flag in args:
-            i = args.index(flag)
-            val = args[i + 1]
-            if setter == "sf":
-                sf = val
-            elif setter == "tag":
-                tag = val
-            else:
-                repeat = int(val)
-            args = args[:i] + args[i + 2:]
-    keys = args or sorted(QUERIES)
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", os.environ.get("SPARK_GRAFT_PLANS_DIR", "r16"))
-    os.makedirs(plans_dir, exist_ok=True)
-    spark = get_spark(app_name="profile_r17",
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--plans", required=True, metavar="DIR",
+                    help="directory for the <key>_<tag>.txt plan dumps")
+    ap.add_argument("--plans-only", action="store_true")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--repeat", type=int, default=3)
+    ap.add_argument("--sf", required=True, metavar="SF_DIR",
+                    help="fixture directory the keys read (e.g. sf0.1)")
+    ap.add_argument("keys", nargs="*")
+    args = ap.parse_args()
+    keys = args.keys or sorted(QUERIES)
+    os.makedirs(args.plans, exist_ok=True)
+    spark = get_spark(app_name="profile_keys",
                       cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
+    sf = args.sf
     # warm-up identical to bench.py
-    if not plans_only:
+    if not args.plans_only:
         QUERIES["q_agg_basic"](spark, sf).collect()
         from pyspark.sql import functions as F
         _noop = F.pandas_udf(lambda s: s, "long")
@@ -64,14 +57,14 @@ def main() -> int:
         df = QUERIES[k](spark, sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        with open(os.path.join(plans_dir, f"{k}_{tag}.txt"), "w") as f:
+        with open(os.path.join(args.plans, f"{k}_{args.tag}.txt"), "w") as f:
             f.write(plan)
-        if plans_only:
+        if args.plans_only:
             nex = plan.count("Exchange")
             print(f"{k}: plan written ({nex} Exchange)", flush=True)
             continue
         coll, noop = [], []
-        for _ in range(repeat):
+        for _ in range(args.repeat):
             spark.sparkContext.setJobDescription(f"{k} collect")
             t0 = time.perf_counter()
             QUERIES[k](spark, sf).collect()
