@@ -13,6 +13,12 @@ Scale notes (100 TB design point):
   engine's sinks (streaming/sinks.py ``_start``) size them to
   ``defaultParallelism`` when a query first starts, since AQE never
   coalesces a streaming plan and the checkpoint keeps the count.
+- streaming checkpoint logs: when a query's checkpoint (and a file
+  sink's output) is on the local file system, ``_start`` writes them
+  through Spark's rename-based FileSystem manager, whose rename(2) is
+  atomic there and forks no readlink/chmod shell. On HDFS and object
+  stores Spark's default FileContext manager stays: its atomic
+  overwrite-rename is what keeps the log safe.
 - session timezone pinned to UTC so TIMESTAMP (instant) semantics match
   the timezone-naive parquet fixtures and the DuckDB oracle.
 """

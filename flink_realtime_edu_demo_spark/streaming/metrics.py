@@ -27,10 +27,11 @@ from .sinks import _start
 class MetricsCollector(StreamingQueryListener):
     """Collects per-batch metric rows from query progress events:
     batch_id, input rows, processed rows/sec, the trigger's phase
-    durations (ms), the event-time watermark, state rows, memory and
-    late-dropped rows summed over state operators, each state operator's
-    partition count, and sink description — the Flink counter set,
-    Spark-shaped."""
+    durations (ms: latestOffset through commitOffsets, and the whole
+    triggerExecution), the event-time watermark, state rows, memory,
+    commit time (ms) and late-dropped rows summed over state operators,
+    each state operator's partition count, and sink description — the
+    Flink counter set, Spark-shaped."""
 
     def __init__(self) -> None:
         self.batches: list[dict] = []
@@ -48,10 +49,12 @@ class MetricsCollector(StreamingQueryListener):
                 "num_input_rows": p.numInputRows,
                 "rows_per_sec": p.processedRowsPerSecond,
                 **{f"{phase}_ms": p.durationMs.get(phase)
-                   for phase in ("addBatch", "getBatch", "queryPlanning", "walCommit")},
+                   for phase in ("latestOffset", "getBatch", "queryPlanning", "walCommit",
+                                 "addBatch", "commitOffsets", "triggerExecution")},
                 "watermark": p.eventTime.get("watermark"),
                 "state_rows": sum(s.numRowsTotal for s in ops),
                 "state_memory_bytes": sum(s.memoryUsedBytes for s in ops),
+                "state_commit_ms": sum(s.commitTimeMs for s in ops),
                 "rows_dropped_by_watermark": sum(s.numRowsDroppedByWatermark for s in ops),
                 "state_partitions": [s.numShufflePartitions for s in ops],
                 "sink": p.sink.description,
@@ -80,4 +83,5 @@ def broadcast_dim_join(
         dim = load_dim(batch_df.sparkSession)
         sink(batch_df.join(F.broadcast(dim), on), batch_id)
 
-    return _start(stream_df, stream_df.writeStream.foreachBatch(handle).outputMode("append"))
+    return _start(stream_df, stream_df.writeStream.foreachBatch(handle).outputMode("append"),
+                  checkpoint=None)

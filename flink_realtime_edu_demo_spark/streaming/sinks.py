@@ -6,20 +6,43 @@ Exactly-once recipe: checkpointing makes each micro-batch replayable
 with a stable batch_id; the foreachBatch writer keys its write on
 (batch_id) so a replayed batch overwrites rather than duplicates
 (idempotent upsert — same end state as 2PC without the coordinator).
+The checkpoint's own logs (offsets, commits, state deltas) are made
+durable by writing a temp file and renaming it into place, so a crash
+never leaves a half-written log entry. On the local file system the
+engine writes them through Spark's rename-based FileSystem manager
+(rename(2) is atomic there); on HDFS and object stores Spark's default
+FileContext manager stays, whose atomic overwrite-rename keeps the log
+safe (see ``_start``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_RENAME_MANAGER = ("org.apache.spark.sql.execution.streaming.checkpointing."
+                   "FileSystemBasedCheckpointFileManager")
 
 
-def _start(df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
-    """Start ``writer`` with one state partition per core.
+def _on_local_fs(paths: Iterable[str], default_fs: str) -> bool:
+    """True when every path, qualified with ``default_fs`` (Hadoop's
+    ``fs.defaultFS``) as Spark qualifies it, is on the local file
+    system: a bare path takes the default FS's scheme."""
+    default = urlparse(default_fs).scheme or "file"
+    return all((urlparse(p).scheme or default) == "file" for p in paths)
+
+
+def _start(df: DataFrame, writer: DataStreamWriter, checkpoint: str | None,
+           *outputs: str) -> StreamingQuery:
+    """Start ``writer`` with one state partition per core, and with the
+    rename-based checkpoint manager when every Spark metadata log the
+    query writes is local.
 
     A stateful query takes its state partition count from
     ``spark.sql.shuffle.partitions`` at first start and its checkpoint
@@ -27,16 +50,43 @@ def _start(df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
     partition is a store each micro-batch loads and commits, so a
     batch-sized default (32 in get_spark, 200 in a vanilla session)
     costs that many tasks per micro-batch however small the state.
-    ``start()`` clones the session conf, so the session's value is
-    restored at once. A restarted query keeps its checkpoint's count:
-    Spark restores it from the offset log."""
-    conf = df.sparkSession.conf
-    prev = conf.get(_SHUFFLE_PARTITIONS)
-    conf.set(_SHUFFLE_PARTITIONS, str(df.sparkSession.sparkContext.defaultParallelism))
+    A restarted query keeps its checkpoint's count: Spark restores it
+    from the offset log.
+
+    The query's Spark metadata logs live under ``checkpoint`` (``None``:
+    the session's checkpoint root, else Spark's temp checkpoint, a bare
+    path) and under each of ``outputs`` (a file sink's
+    ``_spark_metadata``). Without native Hadoop, Spark's default
+    FileContext manager forks a shell on a local FS: readlinks for every
+    rename and a chmod for every created file, about twenty forks per
+    state partition per commit. The FileSystem manager renames with
+    ``File.renameTo``, an atomic rename(2) on a local POSIX FS, so it is
+    chosen only when all the logs are local; on HDFS and object stores
+    Spark's default stays, whose atomic overwrite-rename is what keeps
+    the log safe. A file source's log under the checkpoint is written
+    through the session its ``readStream`` came from, so it keeps that
+    session's manager.
+
+    ``start()`` clones the session conf, so the caller's values are
+    restored at once and the query keeps the ones set here."""
+    spark = df.sparkSession
+    conf = spark.conf
+    default_fs = spark._jsparkSession.sessionState().newHadoopConf().get("fs.defaultFS")
+    logs = (checkpoint or conf.get(_CHECKPOINT_ROOT, None) or "", *outputs)
+    query_conf = {_SHUFFLE_PARTITIONS: str(spark.sparkContext.defaultParallelism)}
+    if _on_local_fs(logs, default_fs):
+        query_conf[_CHECKPOINT_MANAGER] = _RENAME_MANAGER
+    prev = {key: conf.get(key, None) for key in query_conf}
+    for key, value in query_conf.items():
+        conf.set(key, value)
     try:
         return writer.start()
     finally:
-        conf.set(_SHUFFLE_PARTITIONS, prev)
+        for key, value in prev.items():
+            if value is None:
+                conf.unset(key)
+            else:
+                conf.set(key, value)
 
 
 def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
@@ -48,6 +98,8 @@ def start_parquet_sink(df: DataFrame, path: str, checkpoint: str,
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode(mode),
+        checkpoint,
+        path,
     )
 
 
@@ -66,6 +118,7 @@ def idempotent_foreach_batch(
         df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode(mode),
+        checkpoint,
     )
 
 
@@ -115,6 +168,7 @@ def multi_sink_statement_set(
         df.writeStream.foreachBatch(handle)
         .option("checkpointLocation", checkpoint)
         .outputMode(mode),
+        checkpoint,
     )
 
 

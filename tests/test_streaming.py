@@ -154,13 +154,86 @@ def test_engine_query_sizes_state_to_cores(spark, stream_dir, tmp_path):
     assert ops[0]["numShufflePartitions"] == cores
 
 
+_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+@pytest.mark.parametrize("prev", [
+    None,
+    _CHECKPOINTING + "FileContextBasedCheckpointFileManager",
+], ids=["unset", "user_set"])
+def test_engine_query_on_local_checkpoint_uses_rename_manager(spark, stream_dir,
+                                                              tmp_path, prev):
+    """A query the engine starts on a local checkpoint writes its logs
+    through Spark's rename-based FileSystem manager: the query's own
+    session (cloned at start) names it, and the caller's session keeps
+    its previous value, unset or user-set."""
+    if prev is not None:
+        spark.conf.set(_MANAGER, prev)
+    try:
+        q = idempotent_foreach_batch(
+            stream_table(spark, stream_dir, "events"),
+            checkpoint=str(tmp_path / "ckpt"),
+            write_batch=lambda df, batch_id: df.count(),
+        )
+        try:
+            caller = spark.conf.get(_MANAGER, None)
+            own = q._jsq.streamingQuery().sparkSessionForStream().conf().get(_MANAGER, None)
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.unset(_MANAGER)
+    assert own == _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"
+    assert caller == prev
+
+
+@pytest.mark.parametrize("path, default_fs, local", [
+    ("/tmp/x", "file:///", True),
+    ("file:/tmp/x", "file:///", True),
+    ("file:/tmp/x", "hdfs://nn:8020", True),
+    ("/tmp/x", "hdfs://nn:8020", False),
+    ("hdfs://nn/x", "file:///", False),
+    ("s3a://b/x", "file:///", False),
+])
+def test_checkpoint_log_locality(path, default_fs, local):
+    """A log path counts as local only if, qualified with fs.defaultFS,
+    it is on the file:// scheme."""
+    from flink_realtime_edu_demo_spark.streaming.sinks import _on_local_fs
+
+    assert _on_local_fs([path], default_fs) is local
+
+
+def test_parquet_sink_checks_its_output_log(monkeypatch):
+    """start_parquet_sink hands _start its output path as well as the
+    checkpoint (the file sink keeps a _spark_metadata log there): a
+    local checkpoint with an HDFS output path is not switched."""
+    from types import SimpleNamespace
+
+    from flink_realtime_edu_demo_spark.streaming import sinks
+
+    class Builder:  # DataStreamWriter's fluent calls, without Spark
+        def __getattr__(self, name):
+            return lambda *args: self
+
+    monkeypatch.setattr(sinks, "_start", lambda df, writer, *logs: logs)
+    logs = sinks.start_parquet_sink(SimpleNamespace(writeStream=Builder()),
+                                    "hdfs://nn:8020/out", "/tmp/ckpt")
+    assert logs == ("/tmp/ckpt", "hdfs://nn:8020/out")
+    assert not sinks._on_local_fs(logs, "file:///")
+
+
 def test_restart_keeps_checkpoint_state_partitions(spark, sf_dir, stream_dir, tmp_path):
-    """A checkpoint written with another state partition count stays
-    valid: a query started raw with cores + 1 partitions reads half the
-    input and stops; restarted on the same checkpoint through
-    idempotent_foreach_batch it keeps cores + 1 state partitions (Spark
-    restores the count from the offset log), and the folded update-mode
-    output equals the batch answer."""
+    """A checkpoint written with another state partition count, and with
+    another checkpoint manager, stays valid in both directions. A query
+    started raw (Spark's default FileContext manager) with cores + 1
+    partitions reads the first third of the input and stops; restarted
+    on the same checkpoint through idempotent_foreach_batch (the
+    rename-based FileSystem manager) it keeps cores + 1 state partitions
+    (Spark restores the count from the offset log) and reads the second
+    third; a third, raw start reads the rest from the checkpoint the
+    engine wrote. The folded update-mode output equals the batch
+    answer."""
     import os
     import shutil
 
@@ -168,7 +241,7 @@ def test_restart_keeps_checkpoint_state_partitions(spark, sf_dir, stream_dir, tm
     src.mkdir(parents=True)
     parts = sorted(f for f in os.listdir(f"{stream_dir}/events_stream")
                    if f.startswith("part-") and f.endswith(".parquet"))
-    half = len(parts) // 2
+    cut1, cut2 = len(parts) // 3, 2 * len(parts) // 3
 
     def copy(names):  # copy2 keeps the event-time-ordered mtimes
         for f in names:
@@ -183,30 +256,40 @@ def test_restart_keeps_checkpoint_state_partitions(spark, sf_dir, stream_dir, tm
     def query():
         return tumbling_counts(stream_table(spark, str(tmp_path / "src"), "events"))
 
+    def run(q):
+        try:
+            q.processAllAvailable()
+            return q.lastProgress["stateOperators"]
+        finally:
+            q.stop()
+
+    def start_raw():
+        return (query().writeStream.foreachBatch(collect)
+                .option("checkpointLocation", ckpt).outputMode("update").start())
+
     key = "spark.sql.shuffle.partitions"
     cores = spark.sparkContext.defaultParallelism
-    copy(parts[:half])
+    copy(parts[:cut1])
     prev = spark.conf.get(key)
     spark.conf.set(key, str(cores + 1))
     try:
-        q1 = (query().writeStream.foreachBatch(collect)
-              .option("checkpointLocation", ckpt).outputMode("update").start())
+        q1 = start_raw()
     finally:
         spark.conf.set(key, prev)
-    try:
-        q1.processAllAvailable()
-    finally:
-        q1.stop()
+    run(q1)
     assert emitted
 
-    copy(parts[half:])
-    q2 = idempotent_foreach_batch(query(), ckpt, collect, mode="update")
-    try:
-        q2.processAllAvailable()
-        ops = q2.lastProgress["stateOperators"]
-    finally:
-        q2.stop()
+    copy(parts[cut1:cut2])
+    n = len(emitted)
+    ops = run(idempotent_foreach_batch(query(), ckpt, collect, mode="update"))
     assert ops[0]["numShufflePartitions"] == cores + 1
+    assert len(emitted) > n
+
+    copy(parts[cut2:])
+    n = len(emitted)
+    ops = run(start_raw())
+    assert ops[0]["numShufflePartitions"] == cores + 1
+    assert len(emitted) > n
 
     folded = {}
     for r in emitted:  # update mode: the last emission of a window wins
@@ -864,7 +947,8 @@ def test_metrics_listener_and_broadcast_dim_join(spark, sf_dir, stream_dir, tmp_
     the dim snapshot is swapped mid-run and later batches must see the
     NEW mapping — the property Flink's broadcast state provides. A
     stateful windowed query then reports its watermark, state memory,
-    late-dropped rows and one state partition per core."""
+    late-dropped rows, state commit time and one state partition per
+    core."""
     from flink_realtime_edu_demo_spark.streaming.metrics import (
         MetricsCollector,
         broadcast_dim_join,
@@ -923,17 +1007,18 @@ def test_metrics_listener_and_broadcast_dim_join(spark, sf_dir, stream_dir, tmp_
     segs = [s for _, s in seen if s]
     assert segs[0] == {"seg0"} and segs[-1] != segs[0]  # refresh visible
     assert sum(b["num_input_rows"] for b in join_batches) == want_rows
-    phases = ("addBatch_ms", "getBatch_ms", "queryPlanning_ms", "walCommit_ms")
+    phases = ("latestOffset_ms", "getBatch_ms", "queryPlanning_ms", "walCommit_ms",
+              "addBatch_ms", "commitOffsets_ms", "triggerExecution_ms")
     for b in join_batches:  # stateless: no watermark, no state
         assert all(b[k] >= 0 for k in phases), b
         assert b["watermark"] is None and b["state_partitions"] == []
-        assert b["state_rows"] == b["state_memory_bytes"] == 0
+        assert b["state_rows"] == b["state_memory_bytes"] == b["state_commit_ms"] == 0
     assert sum(b["num_input_rows"] for b in agg_batches) == want_rows
     cores = spark.sparkContext.defaultParallelism
     for b in agg_batches:
         assert all(b[k] >= 0 for k in phases), b
         assert b["watermark"] is not None and b["state_partitions"] == [cores]
-        assert b["state_memory_bytes"] > 0
+        assert b["state_memory_bytes"] > 0 and b["state_commit_ms"] >= 0
         assert b["rows_dropped_by_watermark"] == 0  # in-order replay drops nothing
     assert agg_batches[-1]["state_rows"] > 0
 
