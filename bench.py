@@ -32,11 +32,18 @@ Env:
 
 Timing = full query wall clock: plan + execute + collect to the driver
 (the driver's own verify collects too). Session startup is excluded;
-a warm-up query primes the JVM/codegen caches first. The cache is
-cleared after EVERY timed run, so each repeat measures the same
-cold-cache shape as the historical single-pass numbers. The host's
-1-minute load average before and after the sweep is recorded in the
-artifact so a noisy pass is identifiable without re-running.
+two warm-up queries start the JVM and the Arrow Python workers first.
+They do not prime the generated-code cache for the sweep: a key's first
+repeat compiles the classes no earlier key generated.
+session.CODEGEN_CACHE_ENTRIES holds the registry's 2,272 classes; at
+Spark's default of 100 a 262-key sweep evicts each key's classes before
+they are needed again, so a key's time depends on the keys run before
+it: a source of per-key noise besides the host. The
+DataFrame cache is cleared after EVERY timed run, so each repeat
+measures the same cold-cache shape as the historical single-pass
+numbers. The host's 1-minute load average before and after the sweep
+is recorded in the artifact so a noisy pass is identifiable without
+re-running.
 """
 
 from __future__ import annotations
@@ -64,7 +71,7 @@ def main() -> int:
     spark = get_spark(app_name="bench", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm-up: JVM + parquet footer caches + codegen
+    # warm-up: JVM + parquet footer caches
     QUERIES["q_agg_basic"](spark, sf_dir).collect()
     # warm the Arrow/pandas python workers too — first-spawn costs ~1s+
     # and would otherwise be billed to whichever UDF query runs first
